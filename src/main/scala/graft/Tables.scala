@@ -20,8 +20,11 @@ object Tables {
     * table reference for free; the memo is that catalog. The frame is
     * lazy — every action still scans the parquet in full — and the
     * driver testdata is immutable for a session, so a cached listing
-    * cannot go stale. Store/index directories (which DO change) have
-    * their own readers and never come through here.
+    * cannot go stale. Store and index directories (which DO change)
+    * never come through here: a store version opens under the schema
+    * its writer recorded beside it (`StreamApply.ManifestDir.open`),
+    * which saves the same inference cost without a memo, and indexes
+    * have their own readers.
     *
     * SELF-JOIN caveat: every caller now receives the identical memoized
     * Dataset instance, so a query that self-joins a base table via two

@@ -4,8 +4,10 @@ import graft.cdc.Materialize
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.util.control.NonFatal
 
 /** Structured-Streaming side of the CDC engine (SURVEY.md §2 O10/O13 and
   * Q2-as-stream). The reference's consumer loop
@@ -75,6 +77,20 @@ object StreamApply {
 
     private val VersionPrefix = "state_v"
     private val PointerTmpPrefix = "CURRENT.tmp."
+    // the leading underscore keeps it out of Spark's parquet file listing
+    private val SchemaFile = "_schema.json"
+
+    /** `t` as a file source reads it back: every field, array element
+      * and map value nullable.
+      */
+    private def asRead(t: DataType): DataType = t match {
+      case st: StructType => StructType(st.fields.map(f =>
+        f.copy(dataType = asRead(f.dataType), nullable = true)))
+      case a: ArrayType   => ArrayType(asRead(a.elementType), containsNull = true)
+      case m: MapType     => MapType(asRead(m.keyType), asRead(m.valueType),
+        valueContainsNull = true)
+      case other          => other
+    }
 
     private def currentPath = Paths.get(dir, "CURRENT")
 
@@ -86,6 +102,40 @@ object StreamApply {
       else None
 
     def versionPath(ver: String): String = s"$dir/$ver"
+
+    /** Directory of one table of a version: the version directory itself
+      * for a single-table store (`leaf` empty), else its `leaf`
+      * subdirectory (IVM's `state/` and `agg/`).
+      */
+    def leafPath(ver: String, leaf: String): String =
+      if (leaf.isEmpty) versionPath(ver) else s"${versionPath(ver)}/$leaf"
+
+    /** Write `df` as table `leaf` of version `ver` and record its schema
+      * beside the part files. The schema file is written after the Spark
+      * write, because `overwrite` recreates the directory, and before the
+      * caller's [[commitPointer]], so every committed version carries it.
+      */
+    def write(df: DataFrame, ver: String, leaf: String = ""): Unit = {
+      val path = leafPath(ver, leaf)
+      df.write.mode("overwrite").parquet(path)
+      Files.writeString(Paths.get(path, SchemaFile), asRead(df.schema).json)
+    }
+
+    /** Open table `leaf` of version `ver` under the schema its writer
+      * recorded. Footer inference (`spark.read.parquet` without a schema)
+      * runs a Spark job on every call; it remains the fallback for a
+      * version with no readable schema file, such as one written before
+      * versions carried it.
+      */
+    def open(spark: SparkSession, ver: String, leaf: String = ""): DataFrame = {
+      val path = leafPath(ver, leaf)
+      val recorded =
+        try DataType.fromJson(Files.readString(Paths.get(path, SchemaFile))) match {
+          case st: StructType => Some(st)
+          case _              => None
+        } catch { case NonFatal(_) => None }
+      recorded.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+    }
 
     /** Next version name: the triggering batch id plus a monotone epoch,
       * so a replayed batch id never reuses a directory name.
@@ -176,7 +226,13 @@ object StreamApply {
     *   - everything `CURRENT` does not reference is garbage, collected
     *     idempotently on every entry — a torn version write is simply
     *     never referenced, and a crash after the rename only leaves
-    *     collectable strays.
+    *     collectable strays;
+    *   - each version directory holds `_schema.json`, the schema its
+    *     writer wrote, saved before the pointer swings (Delta keeps the
+    *     schema in its log for the same reason). Readers and the next
+    *     merge open the version under it instead of inferring it from
+    *     parquet footers, which is a Spark job per open. A version
+    *     without a readable schema file still opens by inference.
     *
     * With the checkpointed source replaying at-least-once into this
     * idempotent keyed merge, sink state is effectively-once; in
@@ -198,7 +254,7 @@ object StreamApply {
 
     def snapshot(): DataFrame = {
       manifest.currentVersion() match {
-        case Some(v) => spark.read.parquet(manifest.versionPath(v))
+        case Some(v) => manifest.open(spark, v)
         case None    => spark.emptyDataFrame
       }
     }
@@ -215,13 +271,12 @@ object StreamApply {
       val cols = (key +: seq +: opCol +: payloadCols).distinct
       val incoming = batch.select(cols.map(col): _*)
       val merged = manifest.currentVersion() match {
-        case Some(v) => spark.read.parquet(manifest.versionPath(v))
-          .unionByName(incoming)
+        case Some(v) => manifest.open(spark, v).unionByName(incoming)
         case None    => incoming
       }
       val next = Materialize.latestByKey(merged, key, seq, Seq(opCol) ++ payloadCols)
       val ver = manifest.nextVersionName(batchId)
-      next.write.mode("overwrite").parquet(manifest.versionPath(ver))
+      manifest.write(next, ver)
       manifest.commitPointer(ver) // the single atomic step
       manifest.clean()            // superseded version is now garbage
     }
@@ -236,26 +291,87 @@ object StreamApply {
       * `numFiles` files and publish it through the SAME single-pointer
       * commit as [[merge]] — readers observe the old layout or the new
       * one, never a mix, and a crash mid-compaction leaves only an
-      * unreferenced directory for the next writer's clean(). Every merge
-      * writes `spark.sql.shuffle.partitions` part files regardless of
-      * state size, so a long-lived store accretes small files and the
-      * snapshot scan pays per-file open cost — the same read
-      * amplification Delta's OPTIMIZE / Iceberg's rewrite_data_files
-      * exists to fix, reduced to this store's commit protocol. WRITER
+      * unreferenced directory for the next writer's clean(). A merge
+      * writes one part file per post-shuffle partition. AQE's coalescing
+      * (on by default) merges them down to about the core count, but not
+      * below ~1 MB of shuffle data each: a small store is born as one
+      * file, a 100k-key store at 4 cores as 4; with coalescing off every
+      * merge writes `spark.sql.shuffle.partitions` files. Each file costs
+      * the snapshot scan its own open — the read amplification Delta's
+      * OPTIMIZE / Iceberg's rewrite_data_files exists to fix, reduced to
+      * this store's commit protocol. WRITER
       * operation (single-writer contract applies): run it from the
       * maintenance path, never concurrently with merge.
       */
     def compact(numFiles: Int = 1): Unit = {
       manifest.currentVersion().foreach { v =>
-        val data = spark.read.parquet(manifest.versionPath(v))
         val ver = manifest.nextCompactName()
-        data.coalesce(numFiles).write.mode("overwrite")
-          .parquet(manifest.versionPath(ver))
+        manifest.write(manifest.open(spark, v).coalesce(numFiles), ver)
         manifest.commitPointer(ver)
         manifest.clean()
       }
     }
   }
+
+  /** Every manifest-pointer store under `root` — any directory holding
+    * a `CURRENT` file. Separated from [[compactStores]] so a caller can
+    * report discovery independently of rewrites (a maintenance marker
+    * reading "0 compacted over 5 discovered" means the fleet was
+    * already compact; "0 over 0" means the walk found nothing).
+    */
+  def discoverStores(root: String): Seq[java.nio.file.Path] = {
+    val r = Paths.get(root)
+    if (!Files.isDirectory(r)) return Seq.empty
+    import scala.jdk.CollectionConverters._
+    val s = Files.walk(r)
+    try s.iterator().asScala.toList
+      .filter(p => Files.isDirectory(p) &&
+        Files.isRegularFile(p.resolve("CURRENT")))
+    finally s.close()
+  }
+
+  private def parquetParts(dir: String): Long = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.list(Paths.get(dir))
+    try s.iterator().asScala.count(f =>
+      f.getFileName.toString.startsWith("part-")).toLong
+    finally s.close()
+  }
+
+  /** The live version of a store and its tables, each with its part-file
+    * count: one table named "" when the version directory holds the
+    * parquet itself, else one per subdirectory (IVM's `state/` and
+    * `agg/`). None when `CURRENT` names no existing version directory.
+    */
+  private def liveTables(man: ManifestDir): Option[(String, Seq[(String, Long)])] =
+    man.currentVersion().filter(v => Files.isDirectory(Paths.get(man.versionPath(v))))
+      .map { v =>
+        import scala.jdk.CollectionConverters._
+        val s = Files.list(Paths.get(man.versionPath(v)))
+        val subs =
+          try s.iterator().asScala.toList.filter(p =>
+            Files.isDirectory(p) && !p.getFileName.toString.startsWith("_"))
+            .map(_.getFileName.toString)
+          finally s.close()
+        val leaves = if (subs.nonEmpty) subs else List("")
+        v -> leaves.map(l => l -> parquetParts(man.leafPath(v, l)))
+      }
+
+  /** Read-only fleet CENSUS: per discovered store, the live version's
+    * part-file count (None = a `CURRENT` pointer exists but references
+    * no readable version yet). This is what lets a maintenance marker
+    * distinguish "all stores already compact" (n stores, positive live
+    * files, zero rewrites) from "the walk saw nothing" (zero stores) —
+    * the r13 driver artifact's `20/0/0/0` was genuinely the former
+    * (the dial stores are small, and AQE coalesces a small merge's
+    * output to one part file, so a fresh dial fleet is born compact;
+    * see [[ParquetUpsertStore.compact]]), but the marker alone could
+    * not say so because `files_before` sums only REWRITTEN stores.
+    */
+  def storeCensus(root: String): Seq[(String, Option[Long])] =
+    discoverStores(root).sortBy(_.toString).map { sd =>
+      sd.toString -> liveTables(new ManifestDir(sd.toString)).map(_._2.map(_._2).sum)
+    }
 
   /** FLEET maintenance: find every manifest-pointer store under `root`
     * (any directory holding a `CURRENT` file — the one invariant every
@@ -278,109 +394,25 @@ object StreamApply {
     * rewritten. WRITER operation — same single-writer contract as
     * merge/compact; run from the maintenance path only.
     */
-  /** Every manifest-pointer store under `root` — any directory holding
-    * a `CURRENT` file. Separated from [[compactStores]] so a caller can
-    * report discovery independently of rewrites (a maintenance marker
-    * reading "0 compacted over 5 discovered" means the fleet was
-    * already compact; "0 over 0" means the walk found nothing).
-    */
-  def discoverStores(root: String): Seq[java.nio.file.Path] = {
-    val r = Paths.get(root)
-    if (!Files.isDirectory(r)) return Seq.empty
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(r)
-    try s.iterator().asScala.toList
-      .filter(p => Files.isDirectory(p) &&
-        Files.isRegularFile(p.resolve("CURRENT")))
-    finally s.close()
-  }
-
-  /** Read-only fleet CENSUS: per discovered store, the live version's
-    * part-file count (None = a `CURRENT` pointer exists but references
-    * no readable version yet). This is what lets a maintenance marker
-    * distinguish "all stores already compact" (n stores, positive live
-    * files, zero rewrites) from "the walk saw nothing" (zero stores) —
-    * the r13 driver artifact's `20/0/0/0` was genuinely the former
-    * (every store's merge output is AQE-coalesced to one part file, so
-    * a fresh dial fleet is born compact), but the marker alone could
-    * not say so because `files_before` sums only REWRITTEN stores.
-    */
-  def storeCensus(root: String): Seq[(String, Option[Long])] = {
-    import scala.jdk.CollectionConverters._
-    def parquetParts(p: java.nio.file.Path): Long = {
-      val s = Files.list(p)
-      try s.iterator().asScala.count(f =>
-        f.getFileName.toString.startsWith("part-")).toLong
-      finally s.close()
-    }
-    discoverStores(root).sortBy(_.toString).map { sd =>
-      val man = new ManifestDir(sd.toString)
-      sd.toString -> man.currentVersion().flatMap { v =>
-        val verPath = Paths.get(man.versionPath(v))
-        if (!Files.isDirectory(verPath)) None
-        else {
-          val subs = {
-            val s = Files.list(verPath)
-            try s.iterator().asScala.toList.filter(p =>
-              Files.isDirectory(p) && !p.getFileName.toString.startsWith("_"))
-            finally s.close()
-          }
-          val leaves = if (subs.nonEmpty) subs else List(verPath)
-          Some(leaves.map(parquetParts).sum)
-        }
-      }
-    }
-  }
-
   def compactStores(spark: SparkSession, root: String,
-      numFiles: Int = 1): Seq[(String, Long, Long)] = {
-    import scala.jdk.CollectionConverters._
-    val storeDirs = discoverStores(root)
-    def parquetParts(p: java.nio.file.Path): Long = {
-      val s = Files.list(p)
-      try s.iterator().asScala.count(f =>
-        f.getFileName.toString.startsWith("part-")).toLong
-      finally s.close()
-    }
-    storeDirs.sortBy(_.toString).flatMap { sd =>
+      numFiles: Int = 1): Seq[(String, Long, Long)] =
+    discoverStores(root).sortBy(_.toString).flatMap { sd =>
       val man = new ManifestDir(sd.toString)
-      man.currentVersion().flatMap { v =>
-        val verPath = Paths.get(man.versionPath(v))
-        if (!Files.isDirectory(verPath)) None
+      liveTables(man).flatMap { case (v, tables) =>
+        val before = tables.map(_._2).sum
+        if (before <= numFiles.toLong * tables.size) None
         else {
-          val subs = {
-            val s = Files.list(verPath)
-            try s.iterator().asScala.toList.filter(p =>
-              Files.isDirectory(p) && !p.getFileName.toString.startsWith("_"))
-            finally s.close()
+          val ver = man.nextCompactName()
+          tables.foreach { case (l, _) =>
+            man.write(man.open(spark, v, l).coalesce(numFiles), ver, l)
           }
-          val leaves =
-            if (subs.nonEmpty) subs.map(_.getFileName.toString)
-            else Seq("")
-          def leafPath(base: String, leaf: String): String =
-            if (leaf.isEmpty) base else s"$base/$leaf"
-          val before = leaves
-            .map(l => parquetParts(Paths.get(leafPath(man.versionPath(v), l))))
-            .sum
-          if (before <= numFiles.toLong * leaves.size) None
-          else {
-            val ver = man.nextCompactName()
-            leaves.foreach { l =>
-              spark.read.parquet(leafPath(man.versionPath(v), l))
-                .coalesce(numFiles).write.mode("overwrite")
-                .parquet(leafPath(man.versionPath(ver), l))
-            }
-            man.commitPointer(ver)
-            man.clean()
-            val after = leaves
-              .map(l => parquetParts(Paths.get(leafPath(man.versionPath(ver), l))))
-              .sum
-            Some((sd.toString, before, after))
-          }
+          man.commitPointer(ver)
+          man.clean()
+          val after = tables.map { case (l, _) => parquetParts(man.leafPath(ver, l)) }.sum
+          Some((sd.toString, before, after))
         }
       }
     }
-  }
 
   /** foreachBatch upsert writer over a normalized CDC event stream. */
   def upsertWriter(events: DataFrame, store: ParquetUpsertStore,
@@ -415,10 +447,8 @@ object StreamApply {
 
     private val manifest = new ManifestDir(dir)
 
-    private def stateAt(v: String): DataFrame =
-      spark.read.parquet(s"${manifest.versionPath(v)}/state")
-    private def aggAt(v: String): DataFrame =
-      spark.read.parquet(s"${manifest.versionPath(v)}/agg")
+    private def stateAt(v: String): DataFrame = manifest.open(spark, v, "state")
+    private def aggAt(v: String): DataFrame = manifest.open(spark, v, "agg")
 
     /** Live (non-deleted) keyed state (changelog columns stripped). */
     def view(): DataFrame = manifest.currentVersion() match {
@@ -478,15 +508,14 @@ object StreamApply {
           col("__old.cat").as("__old_cat") :+
           col("__touched"): _*)
       val ver = manifest.nextVersionName(batchId)
-      merged.write.mode("overwrite")
-        .parquet(s"${manifest.versionPath(ver)}/state")
+      manifest.write(merged, ver, "state")
       // Signed delta from the changelog columns alone: −1 for the old
       // winner's value if it was live, +1 for the new winner's if live —
       // both rows unfolded from the ONE touched-state row. Reading the
       // just-written bytes (the ones the pointer is about to publish)
       // keeps the merge single-evaluation without pinning state in
       // executor memory (the round-6/7 trade, unchanged).
-      val st = spark.read.parquet(s"${manifest.versionPath(ver)}/state")
+      val st = stateAt(ver)
         .filter(col("__touched") === 1)
         .select(col(aggCol), col(opCol), col("__old_op"), col("__old_cat"))
       val delta = st.select(explode(array(
@@ -506,8 +535,7 @@ object StreamApply {
         .filter(col("n") > 0)
       // the maintained aggregate is small by definition (one row per
       // aggCol value) — one output file, not one per shuffle partition
-      newAgg.coalesce(1).write.mode("overwrite")
-        .parquet(s"${manifest.versionPath(ver)}/agg")
+      manifest.write(newAgg.coalesce(1), ver, "agg")
       manifest.commitPointer(ver) // ONE atomic step commits both tables
       manifest.clean()
     }
