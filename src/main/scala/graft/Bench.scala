@@ -10,11 +10,10 @@ case class BenchEv(seq: Long, key: Int, op: String, value: Double,
 case class BenchCatEv(seq: Long, key: Int, op: String, cat: String,
   value: Double)
 
-/** The upsert and IVM micro-bench workloads, defined ONCE: `Bench`'s
-  * streaming section and `StreamBench`'s fast A/B harness both call
-  * these, so an A/B'd number always measures exactly the
-  * `upsert_rows_per_sec` / `ivm_rows_per_sec` workload it stands in
-  * for (a drifted copy would silently benchmark different state widths).
+/** The upsert, IVM and chunk-dedup micro-bench workloads behind
+  * `upsert_rows_per_sec` / `ivm_rows_per_sec` / the chunk dial. A fast
+  * streaming-only A/B is `SPARK_GRAFT_BATCH=0` on [[Bench]] itself, so
+  * an A/B'd number always measures exactly the dial it stands in for.
   */
 private[graft] object StreamFeeds {
   import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -268,30 +267,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle partitions default to the core count, but at a sweep SF
-    // 10–100× the daily corpus the per-partition working set must keep
-    // fitting in the (fixed) executor memory — the brief's own sizing
-    // dial. SPARK_GRAFT_SHUFFLE scales it with the data the way a real
-    // cluster submit would.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Generated-class cache sized to the workload, not the 100-entry
-      // default (static conf, JVM-wide): one pass over the 249-query
-      // registry generates thousands of DISTINCT codegen classes, so at
-      // the default every pass-2 execution regenerates and re-JITs its
-      // hot loops — measured on d8's probe stage: pass 2 as cold as
-      // pass 1 (0.9 s/task vs the 22 ms/task a cache-warm run reaches).
-      // Query-diversity-dependent, not scale- or core-count-dependent:
-      // any long-lived session running a diverse query mix wants this.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     val warmDir = {
       val d = "/root/testdata/sf0.001"
@@ -497,8 +473,8 @@ object Bench {
     // source streams rows through the socket/scan and its task binary
     // carries only the plan. Shrinking batches to duck the warning
     // would HALVE the reported rows/s (per-batch overhead — checkpoint
-    // commit + state rewrite — dominates at 10k rows: A/B'd with
-    // `StreamBench 2 10`), so the feed stays at 5 x 20k and the warning
+    // commit + state rewrite — dominates at 10k rows; PLANS.md round 8's
+    // 2-vs-10-batch A/B), so the feed stays at 5 x 20k and the warning
     // is accepted as documented.
     val SourceParts = StreamFeeds.SourceParts
 
@@ -671,7 +647,8 @@ object Bench {
       n / ((System.nanoTime() - t0) / 1e9)
     }
 
-    // FLOOR (r10 nb-sweep, `StreamBench reps {1,5,20}` at 20k docs): time
+    // FLOOR (r10 nb-sweep at 1/5/20 batches of 20k docs, PLANS.md
+    // "Round-10: ChunkDedup ingest floor"): time
     // fits fixed·nb + marginal·n with fixed ≈ 1.2 s/batch and marginal
     // ≈ 40 µs/doc. The fixed cost is the DURABLE-COMMIT protocol — two
     // ParquetUpsertStore merges (each: state read + keyed-dedup shuffle +

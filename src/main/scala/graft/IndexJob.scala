@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** The nightly index job as a runnable main: force-build every derived
   * corpus index for each given corpus directory, then vacuum indexes
   * whose fingerprints match none of them. This is the operational entry
@@ -34,18 +32,9 @@ object IndexJob {
     val dirs = args.headOption
       .getOrElse("/root/testdata/sf0.001").split(",").toSeq
     val doVacuum = !args.contains("--no-vacuum")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_SHUFFLE: same dial as Bench/BandGeomSweep — the sf10
-    // synth builds want 128 partitions so the band-join explosion
-    // spreads (r13 finding), while the default stays cpus
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_SHUFFLE (see Session): the sf10 synth builds want 128
+    // partitions so the band-join explosion spreads (PLANS.md round 13)
+    val spark = Session.local()
     val gate = !args.contains("--no-gate")
     var gateFailed = false
     for (d <- dirs) {

@@ -51,14 +51,7 @@ object MaintenanceJob {
     val sfDirs = positional.drop(1).headOption
       .map(_.split(",").toSeq).getOrElse(Seq.empty)
     val doVacuum = !args.contains("--no-vacuum")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val (compacted, built, gone) = run(spark, storesRoot, sfDirs, doVacuum)
     compacted.foreach { case (d, b, a) =>
       println(s"MAINTENANCE compacted $d files $b -> $a")

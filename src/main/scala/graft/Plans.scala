@@ -1,13 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Offline plan dump: writes `.explain("formatted")` for the named
   * registry queries (or all of them) to `<outDir>/<name>_<tag>.txt` —
-  * the optimization rounds' evidence files (`plans/r14/...`). Pure
-  * metadata: plans are captured from the analyzed frames without
-  * executing anything, so a full-registry dump is seconds, not a bench.
+  * the optimization rounds' evidence files (`plans/r14/...`). Plans
+  * are captured from the built frames without forcing them, but
+  * building a frame can itself run jobs (at sf0.1: d23_kcore's peel
+  * loop 21, c10_bpe_train 14, x29_textrank 5) and materialize their
+  * results, so the dump of such a query shows only the plan's tail.
   *
   * Usage: runMain graft.Plans <sfDir> <outDir> <tag> [q1,q2,...]
   */
@@ -15,15 +16,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, tag) = args.take(3)
     val only: Option[Set[String]] = args.lift(3).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     Files.createDirectories(Paths.get(outDir))
     val unknown = only.map(_ -- SparkEntry.queries.keySet).getOrElse(Set.empty)
     require(unknown.isEmpty, s"unknown keys: $unknown")

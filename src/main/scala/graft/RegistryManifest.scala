@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
@@ -75,14 +73,7 @@ object RegistryManifest {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val cwd = Paths.get(sys.props.getOrElse("user.dir", "."))
     val exps = parseExponents(new String(
       Files.readAllBytes(cwd.resolve("PLANS.md")), StandardCharsets.UTF_8))

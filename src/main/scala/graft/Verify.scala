@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json, for the DuckDB compare. A query that throws is
   * listed on stderr at the end and makes the run exit 1; oracle_sql.json
@@ -10,19 +10,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // Optional third arg: comma-separated query names for a targeted run.
     val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // one pass over 249 queries generates thousands of distinct
-      // codegen classes; the 100-entry default cache re-compiles hot
-      // loops mid-run (see Bench.scala) — same fix, same env dial
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     val failed = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -36,21 +24,8 @@ object Verify {
           Some(name)
         }
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql))
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(
@@ -58,4 +33,12 @@ object Verify {
       sys.exit(1)
     }
   }
+
+  /** `oracle_sql.json`'s body: one JSON object, name → oracle SQL, in the
+    * map's order. Jackson escapes quotes, backslashes and every control
+    * character — a tab or CR in builder-authored SQL must not make the
+    * driver's json.load fail and silently zero the round's correctness.
+    */
+  def oracleJson(m: Map[String, String]): String =
+    new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(m.asJava)
 }

@@ -469,27 +469,17 @@ object Dedup {
     * ([[graft.streaming.NearDupStream]]), so both paths maintain
     * byte-identical index rows.
     */
-  private[graft] def sketchOf(docsFrame: DataFrame): DataFrame =
-    sketchOfG(docsFrame, LshBands, LshPerms)
-
-  /** [[sketchOf]] under an explicit geometry (`nPerms` permutations in
-    * `nBands` bands of `nPerms/nBands` rows) — the r13 geometry sweep
-    * ([[lshGeometrySweep]]) builds candidate geometries from it; the
-    * default path always passes ([[LshBands]], [[LshPerms]]).
-    */
-  private[graft] def sketchOfG(docsFrame: DataFrame, nBands: Int,
-      nPerms: Int): DataFrame = {
-    val rows = nPerms / nBands
+  private[graft] def sketchOf(docsFrame: DataFrame): DataFrame = {
     val exploded = docsFrame
       .select(col("doc_id"),
         explode(array_distinct(transform(tokenSet(col("text")),
           t => tokenHash(t)))).as("h"))
     exploded.groupBy("doc_id")
       .agg(min(affine(0, col("h"))).as("s0"),
-        (1 until nPerms).map(i => min(affine(i, col("h"))).as(s"s$i")) :+
+        (1 until LshPerms).map(i => min(affine(i, col("h"))).as(s"s$i")) :+
           sort_array(collect_set(col("h"))).as("toks"): _*)
       .select(col("doc_id") +:
-        (0 until nBands).map(b => bandKeyAt(b, rows).as(s"bk$b")) :+
+        (0 until LshBands).map(b => bandKey(b).as(s"bk$b")) :+
         col("toks"): _*)
   }
 
@@ -498,7 +488,7 @@ object Dedup {
     * requires NO earlier band to have matched — each colliding pair is
     * emitted exactly once, so there is no multi-million-row DISTINCT
     * over the band-inflated candidate set. Only (doc_id, band keys) move
-    * through the joins. Shared by d3, d8 and the geometry sweep.
+    * through the joins. Shared by d3 and d8.
     *
     * HOT-KEY CAP (`hotCap` — [[HotBandKeyCap]] on the d3 chain, absent
     * on d8's estimator, whose contract is the uncapped candidate set):
@@ -646,49 +636,14 @@ object Dedup {
   def lshRecallEval(spark: SparkSession, sfDir: String): DataFrame =
     lshRecallEvalOn(sketchFrame(spark, sfDir), minhashLsh(spark, sfDir))
 
-  /** The r13 GEOMETRY SWEEP unit: build the whole d3 pipeline under an
-    * explicit `nBands` geometry (sketch → banded candidates → exact
-    * confirm), then score it with the d25 recall eval — one row of
-    * (geometry, candidate volume, confirmed pairs, probe recall). The
-    * candidate count is the geometry's COST dial (every candidate pays
-    * an exact-confirm intersection); recall_ppm is its QUALITY dial.
-    * Driven by [[graft.BandGeomSweep]]; driver-side `.count()` is fine
-    * here — this is offline eval tooling, not a serving path.
-    */
-  private[graft] def lshGeometrySweep(spark: SparkSession, sfDir: String,
-      nBands: Int, nPerms: Int): DataFrame = {
-    val sk = sketchOfG(docs(spark, sfDir), nBands, nPerms).localCheckpoint()
-    // the candidate set is NEVER materialized (the engine path streams
-    // it straight into the confirm; at sf10-synth 4×4 it is ~10⁹ rows
-    // and a localCheckpoint here OOMed the first sweep attempt) — the
-    // count and the confirm are two traversals of the same lazy frame
-    val cand = bandCandidates(
-      sk.select(col("doc_id") +: (0 until nBands).map(i => col(s"bk$i")): _*),
-      nBands)
-    val confirmed = jaccardPairs(
-      cand
-        .join(sk.select(col("doc_id").as("doc_a"), col("toks").as("ta")),
-          Seq("doc_a"))
-        .join(sk.select(col("doc_id").as("doc_b"), col("toks").as("tb")),
-          Seq("doc_b")),
-      col("ta"), col("tb"), 0.9, (9, 10)).localCheckpoint()
-    val recall = lshRecallEvalOn(sk, confirmed.select("doc_a", "doc_b"))
-      .agg(sum(col("n_truth")).as("n_truth"), sum(col("n_found")).as("n_found"))
-    spark.range(1)
-      .select(lit(nBands).as("n_bands"), lit(nPerms / nBands).as("rows_per_band"),
-        lit(cand.count()).as("candidates"), lit(confirmed.count()).as("confirmed"))
-      .crossJoin(recall) // two one-row frames
-      .withColumn("recall_ppm", expr("n_found * 1000000 DIV n_truth"))
-  }
-
   /** d26 — LSH BAND-KEY OCCUPANCY AUDIT: per band, how many distinct
     * band keys exist, the largest key's member count, and the implied
     * candidate upper bound Σ C(members,2) — the dial that tells an LSH
     * operator whether a HUB FAMILY is about to make the next index
     * build quadratic, BEFORE paying the build (this exact probe caught
     * 4×4's 92 820-member hot key / 8.2 B-candidate flood at sf10 during
-    * the r13 geometry sweep and redirected the adoption to 8×8/64; run
-    * standalone at any SF via `SPARK_GRAFT_VOLUME_ONLY=1 BandGeomSweep`).
+    * the r13 geometry sweep and redirected the adoption to 8×8/64 —
+    * PLANS.md "Round-13: 4×4 at the second decade").
     * All integer arithmetic — hash-exact in the oracle. Scale shape:
     * one explode of [[LshBands]] (band, key) structs off the persisted
     * sketch index, two map-side-combined aggregations; output is
@@ -1944,147 +1899,6 @@ object Dedup {
     val per = sketchFrame(spark, sfDir)
     incrementalPairs(per.filter(col("doc_id") % 10 === 0),
       per.filter(col("doc_id") % 10 =!= 0), checkpointSides = true)
-  }
-
-  /** Optimization-round experiment harness (graft.Scratch): times the
-    * d13 candidate stage in isolation and alternative confirm shapes
-    * against the shipped one. Diagnostic only — never registered.
-    */
-  private[graft] def scratchD13Variants(spark: SparkSession, sfDir: String,
-      time: String => (=> Long) => Long,
-      force: DataFrame => Long): Unit = {
-    val per = sketchFrame(spark, sfDir)
-    val delta = per.filter(col("doc_id") % 10 === 0)
-    val index = per.filter(col("doc_id") % 10 =!= 0)
-    // warm
-    force(incrementalPairs(delta, index))
-
-    val keep = Seq(col("doc_id")) ++ bandCols.map(col) :+ col("toks")
-    val all = delta.select(lit(true).as("b_delta") +: keep: _*)
-      .unionByName(index.select(lit(false).as("b_delta") +: keep: _*))
-    val l = delta.select(col("doc_id").as("da") +:
-      bandCols.map(c => col(c).as(s"a$c")): _*)
-    val corpus = all.select(col("doc_id").as("db") +: col("b_delta") +:
-      bandCols.map(c => col(c).as(s"b$c")): _*)
-    val once = col("da") < col("db") || !col("b_delta")
-    def candOf(lf: DataFrame, cf: DataFrame, extraCond: Column): DataFrame =
-      (0 until LshBands).map { b =>
-        val cond = (0 until b).map(j => col(s"abk$j") =!= col(s"bbk$j"))
-          .foldLeft(col(s"abk$b") === col(s"bbk$b") &&
-            col("da") =!= col("db") && once && extraCond)(_ && _)
-        lf.join(cf, cond).select(col("da"), col("db"))
-      }.reduce(_ unionByName _)
-        .select(least(col("da"), col("db")).as("doc_a"),
-          greatest(col("da"), col("db")).as("doc_b"))
-
-    time("A: candidates only")(force(
-      candOf(l, corpus, lit(true))))
-    time("B: shipped d13")(force(incrementalPairs(delta, index)))
-    // C: size prefilter inside the band join condition
-    val lS = delta.select(col("doc_id").as("da") +: size(col("toks")).as("na") +:
-      bandCols.map(c => col(c).as(s"a$c")): _*)
-    val corpusS = all.select(col("doc_id").as("db") +: col("b_delta") +:
-      size(col("toks")).as("nb") +: bandCols.map(c => col(c).as(s"b$c")): _*)
-    val candC = candOf(lS, corpusS,
-      least(col("na"), col("nb")) * 19 >= (col("na") + col("nb")) * 9)
-    val toks = all.select(col("doc_id"), col("toks"))
-    time("C: prefilter in band join")(force(jaccardPairs(
-      candC
-        .join(toks.select(col("doc_id").as("doc_a"), col("toks").as("ta")), Seq("doc_a"))
-        .join(toks.select(col("doc_id").as("doc_b"), col("toks").as("tb")), Seq("doc_b")),
-      col("ta"), col("tb"), 0.9, (9, 10))))
-    // D: carry toks through the band joins (no re-join)
-    val lT = delta.select(col("doc_id").as("da") +: col("toks").as("tka") +:
-      bandCols.map(c => col(c).as(s"a$c")): _*)
-    val corpusT = all.select(col("doc_id").as("db") +: col("b_delta") +:
-      col("toks").as("tkb") +: bandCols.map(c => col(c).as(s"b$c")): _*)
-    val candD = (0 until LshBands).map { b =>
-      val cond = (0 until b).map(j => col(s"abk$j") =!= col(s"bbk$j"))
-        .foldLeft(col(s"abk$b") === col(s"bbk$b") &&
-          col("da") =!= col("db") && once)(_ && _)
-      lT.join(corpusT, cond).select(col("da"), col("db"), col("tka"), col("tkb"))
-    }.reduce(_ unionByName _)
-      .select(least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"),
-        when(col("da") < col("db"), col("tka")).otherwise(col("tkb")).as("ta"),
-        when(col("da") < col("db"), col("tkb")).otherwise(col("tka")).as("tb"))
-    time("D: toks carried through join")(force(
-      jaccardPairs(candD, col("ta"), col("tb"), 0.9, (9, 10))))
-    // E: lazy-checkpoint the 500-row delta band frame (8 broadcast builds
-    // currently each re-scan the parquet index)
-    val lCk = l.localCheckpoint(false)
-    val toksE = all.select(col("doc_id"), col("toks"))
-    def confirm(cand: DataFrame): DataFrame = jaccardPairs(
-      cand
-        .join(toksE.select(col("doc_id").as("doc_a"), col("toks").as("ta")), Seq("doc_a"))
-        .join(toksE.select(col("doc_id").as("doc_b"), col("toks").as("tb")), Seq("doc_b")),
-      col("ta"), col("tb"), 0.9, (9, 10))
-    time("E: delta ckpt")(force(confirm(candOf(lCk, corpus, lit(true)))))
-    // F: checkpoint both narrow sides
-    val corpusCk = corpus.localCheckpoint(false)
-    time("F: delta+corpus ckpt")(force(confirm(candOf(lCk, corpusCk, lit(true)))))
-    time("F2: repeat")(force(confirm(candOf(lCk, corpusCk, lit(true)))))
-    // G: F plus the size prefilter inside the band join
-    val lSCk = delta.select(col("doc_id").as("da") +: size(col("toks")).as("na") +:
-      bandCols.map(c => col(c).as(s"a$c")): _*).localCheckpoint(false)
-    val corpusSCk = all.select(col("doc_id").as("db") +: col("b_delta") +:
-      size(col("toks")).as("nb") +: bandCols.map(c => col(c).as(s"b$c")): _*)
-      .localCheckpoint(false)
-    time("G: ckpt + prefilter in join")(force(confirm(candOf(lSCk, corpusSCk,
-      least(col("na"), col("nb")) * 19 >= (col("na") + col("nb")) * 9))))
-    time("G2: repeat")(force(confirm(candOf(lSCk, corpusSCk,
-      least(col("na"), col("nb")) * 19 >= (col("na") + col("nb")) * 9))))
-  }
-
-  /** Optimization-round d23 experiments (graft.Scratch). */
-  private[graft] def scratchD23Variants(spark: SparkSession, sfDir: String,
-      time: String => (=> Long) => Long,
-      force: DataFrame => Long): Unit = {
-    val pairs = minhashLsh(spark, sfDir)
-    force(kcoreOf(pairs, CoreK)) // warm
-    time("V1: shipped kcore")(force(kcoreOf(pairs, CoreK)))
-    // V2: edges lazy-checkpointed once, mirrored via union
-    def kcoreCk(edgesCk: DataFrame): DataFrame = {
-      var deg = edgesCk.groupBy(col("u").as("doc_id"))
-        .agg(count(lit(1)).as("deg"))
-        .localCheckpoint(false)
-      val shells = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      var round = 1L
-      var doomed = deg.filter(col("deg") < CoreK).localCheckpoint(false)
-      var nDoomed = doomed.count()
-      while (nDoomed > 0) {
-        shells += doomed.select(col("doc_id"), lit(false).as("in_core"),
-          lit(round).as("peel_round"), col("deg"))
-        val loss = edgesCk
-          .join(doomed.select(col("doc_id").as("v")), Seq("v"))
-          .groupBy(col("u").as("doc_id"))
-          .agg(count(lit(1)).as("lost"))
-        deg = deg.filter(col("deg") >= CoreK)
-          .join(loss, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            (col("deg") - coalesce(col("lost"), lit(0L))).as("deg"))
-          .localCheckpoint(false)
-        round += 1
-        doomed = deg.filter(col("deg") < CoreK).localCheckpoint(false)
-        nDoomed = doomed.count()
-      }
-      val core = deg.select(col("doc_id"), lit(true).as("in_core"),
-        lit(0L).as("peel_round"), col("deg"))
-      (shells :+ core).reduce(_ unionByName _)
-    }
-    val edgesU = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .unionByName(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
-    time("V2: edges union+ckpt")(force(kcoreCk(edgesU.localCheckpoint(false))))
-    val edgesE = pairs
-      .select(explode(array(
-        struct(col("doc_a").as("u"), col("doc_b").as("v")),
-        struct(col("doc_b").as("u"), col("doc_a").as("v")))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-    time("V3: edges explode+ckpt")(force(kcoreCk(edgesE.localCheckpoint(false))))
-    // V4: pre-shuffle the checkpointed edges on v (the per-round join key)
-    time("V4: edges repart(v)+ckpt")(force(kcoreCk(
-      edgesU.repartition(spark.sessionState.conf.numShufflePartitions, col("v"))
-        .localCheckpoint(false))))
   }
 
   /** The per-ingest engine shared by d13 and the streaming writer

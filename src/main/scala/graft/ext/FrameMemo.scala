@@ -62,7 +62,7 @@ private[graft] object FrameMemo {
     * Eviction UNPERSISTS the checkpoint blocks, not just the
     * references: a dereferenced localCheckpoint RDD is only released
     * when a GC cycle hands it to the async ContextCleaner, so a
-    * many-query driver run (Bench, Sweep) would otherwise accumulate
+    * many-query driver run (Bench, Prof) would otherwise accumulate
     * dead blocks in the BlockManager and tax every later CPU-dense
     * stage with memory pressure — measured as a >10x slowdown on the
     * codec queries late in a shared-JVM sweep. The memoized frame's
@@ -74,7 +74,7 @@ private[graft] object FrameMemo {
     * localCheckpoint'd plan has truncated lineage — a caller that holds
     * a memoized frame (or anything derived from one) ACROSS a clear()
     * gets "checkpoint block not found" on its next action, not a
-    * recompute. The internal callers (Bench/Sweep pass boundaries,
+    * recompute. The internal callers (Bench/Prof pass boundaries,
     * CorpusIndexSpec) hold nothing across the call by construction;
     * new call sites must preserve that. Pass `owner` to evict only one
     * session's frames — the shared-JVM-multiple-sessions case (test
@@ -122,7 +122,7 @@ private[graft] object FrameMemo {
     * + ContextCleaner GC lets repeated invocations in one session (the
     * bench's median-of-N passes) accumulate disk blocks unboundedly.
     * Tracking ties the release to the same pass boundary that already
-    * destroys the memoized checkpoints, which every Bench/Sweep pass
+    * destroys the memoized checkpoints, which every Bench/Prof pass
     * crosses. Same lifetime contract as the memo: holding a tracked
     * frame (or a plan over it) across a clear() recomputes from lineage
     * (persist, unlike localCheckpoint, keeps lineage — so this is a

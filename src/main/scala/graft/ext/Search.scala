@@ -534,7 +534,7 @@ object Search {
     // dedup (keys ⊇ vk) and the self-join (key = vk) require. The
     // planner BROADCASTS one side of the self-join, so this posting
     // build evaluates TWICE (r15 before-plan, nodes 1-11 vs 12-22) —
-    // measured (scratchX23Variants, interleaved ×3) that is the FASTEST
+    // measured (OPTIMIZATION_r15.md x23, interleaved ×3) that is the FASTEST
     // shape at sf0.1: the build is cheap next to the levenshtein confirm
     // + survivor distinct, and every single-evaluation alternative
     // (lazy checkpoint; checkpoint + broadcast hint; SHUFFLE_MERGE with
@@ -556,43 +556,6 @@ object Search {
           abs(col("a.ln") - col("b.ln")) <= 1)
       .select(col("a.name").as("name_a"), col("b.name").as("name_b"))
     cand.filter(expr("levenshtein(name_a, name_b, 1) = 1")).distinct()
-  }
-
-  /** Optimization-round x23 experiments (graft.Scratch): V1 = shipped
-    * r15 lazily-checkpointed postings (subtree evaluates once, both join
-    * sides read cached blocks); V2 = the r14 shape (no checkpoint — the
-    * planner broadcasts one side and re-evaluates the whole posting
-    * build for it). Interleaved so ambient-load drift cancels.
-    */
-  private[graft] def scratchX23Variants(spark: SparkSession, sfDir: String,
-      time: String => (=> Long) => Long,
-      force: DataFrame => Long): Unit = {
-    def postings0 = graft.Tables.customer(spark, sfDir)
-      .select(col("c_name").as("name")).distinct()
-      .select(col("name"), explode(delVariants(col("name"))).as("variant"))
-      .select(col("name"), xxhash64(col("variant")).as("vk"),
-        length(col("name")).as("ln"))
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("vk"))
-      .distinct()
-    def pairsOf(postings: DataFrame, right: DataFrame => DataFrame): DataFrame = {
-      val cand = postings.alias("a")
-        .join(right(postings).alias("b"),
-          col("a.vk") === col("b.vk") && col("a.name") < col("b.name") &&
-            abs(col("a.ln") - col("b.ln")) <= 1)
-        .select(col("a.name").as("name_a"), col("b.name").as("name_b"))
-      cand.filter(expr("levenshtein(name_a, name_b, 1) = 1")).distinct()
-    }
-    def v1 = pairsOf(postings0.localCheckpoint(false), identity)
-    def v2 = pairsOf(postings0, identity)
-    def v3 = pairsOf(postings0.localCheckpoint(false), broadcast)
-    def v4 = pairsOf(postings0, df => df.hint("SHUFFLE_MERGE"))
-    force(v1); force(v2); force(v3); force(v4) // warm
-    for (rep <- 1 to 3) {
-      time(s"V1 rep$rep: ckpt postings")(force(v1))
-      time(s"V2 rep$rep: no ckpt, BHJ (r14)")(force(v2))
-      time(s"V3 rep$rep: ckpt + broadcast")(force(v3))
-      time(s"V4 rep$rep: no ckpt, SMJ reuse")(force(v4))
-    }
   }
 
   /** x30's saved-search registry (the percolator's stored queries):

@@ -539,50 +539,6 @@ object Validate {
         ppm("n_violating", "n_groups").as("violation_ppm"))
   }
 
-  /** Optimization-round v7 experiments (graft.Scratch): the three
-    * formulations of the distinct rollup, interleaved so ambient-load
-    * drift cancels. V1 = shipped r15 explicit pre-aggregate; V2 = the
-    * r14 repartition + count_distinct (no partial aggregation anywhere);
-    * V3 = plain count_distinct (the r13 shape — planner-inserted partial
-    * on (fd, __l, __r), AQE coalescing free to act).
-    */
-  private[graft] def scratchV7Variants(spark: SparkSession, sfDir: String,
-      time: String => (=> Long) => Long,
-      force: DataFrame => Long): Unit = {
-    def pairs(name: String, df: DataFrame, lhs: String, rhs: String): DataFrame =
-      df.select(lit(name).as("fd"), col(lhs).cast("string").as("__l"),
-        col(rhs).cast("string").as("__r"))
-    def union: DataFrame =
-      pairs("documents: source->lang",
-          Tables.documents(spark, sfDir), "source", "lang")
-        .unionByName(pairs("orders: o_custkey->o_orderpriority",
-          Tables.orders(spark, sfDir), "o_custkey", "o_orderpriority"))
-        .unionByName(pairs("lineitem: l_orderkey->l_linestatus",
-          Tables.lineitem(spark, sfDir), "l_orderkey", "l_linestatus"))
-        .unionByName(pairs("customer: c_nationkey->c_mktsegment",
-          Tables.customer(spark, sfDir), "c_nationkey", "c_mktsegment"))
-    def finish(nd: DataFrame): DataFrame =
-      nd.groupBy("fd").agg(count(lit(1)).as("n_groups"),
-        sum(when(col("nd") > 1L, 1L).otherwise(0L)).as("n_violating"))
-        .select(col("fd"), col("n_groups"), col("n_violating"),
-          ppm("n_violating", "n_groups").as("violation_ppm"))
-    def v1 = finish(union
-      .groupBy("fd", "__l", "__r").agg(count(lit(1)).as("__dup"))
-      .groupBy("fd", "__l").agg(count(col("__r")).as("nd")))
-    def v2 = finish(union
-      .repartition(spark.sessionState.conf.numShufflePartitions,
-        col("fd"), col("__l"))
-      .groupBy("fd", "__l").agg(count_distinct(col("__r")).as("nd")))
-    def v3 = finish(union
-      .groupBy("fd", "__l").agg(count_distinct(col("__r")).as("nd")))
-    force(v1); force(v2); force(v3) // warm
-    for (rep <- 1 to 3) {
-      time(s"V1 rep$rep: explicit pre-agg")(force(v1))
-      time(s"V2 rep$rep: repart+cd (r14)")(force(v2))
-      time(s"V3 rep$rep: plain cd (r13)")(force(v3))
-    }
-  }
-
   /** v8 anomaly policy: a day is anomalous when its absolute deviation
     * from the median daily volume exceeds this many MADs, stated in ppm
     * of a MAD (3.5 MADs — the conventional robust-outlier cutoff). The

@@ -482,8 +482,9 @@ object StreamApply {
       // state (filter `__touched`, pushed to parquet): no second scan of
       // the old state, no distinct-keys broadcast job, no semi join.
       // Round-7's shape paid all three per micro-batch, and the A/B
-      // (`StreamBench 2 {2,10}`) showed per-batch FIXED cost — not
-      // per-row work — dominating ivm_rows_per_sec.
+      // (PLANS.md "Round-8 plan audit", 2 vs 10 batches) showed
+      // per-batch FIXED cost — not per-row work — dominating
+      // ivm_rows_per_sec.
       //
       // Replay stays self-cancelling with no batch-id bookkeeping: a
       // replayed batch finds the state-origin winner already equal to
