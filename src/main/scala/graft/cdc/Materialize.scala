@@ -16,6 +16,13 @@ import org.apache.spark.sql.functions._
   * instead of the full event stream. On a CDC feed with many updates per
   * key that is the difference between shuffling the whole history and
   * shuffling roughly the live-key set.
+  *
+  * That rationale is for folding an event history. It does not cover
+  * merging a micro-batch into a store that already holds one row per
+  * key: there the partial aggregate reduces nothing on the state side,
+  * so `StreamApply.ParquetUpsertStore` folds only the batch and
+  * hash-joins the fold to the state instead of calling [[latestByKey]]
+  * over both.
   */
 object Materialize {
 

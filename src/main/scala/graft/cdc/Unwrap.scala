@@ -14,11 +14,12 @@ import org.apache.spark.sql.functions._
   *   3. tombstone (null value; the key alone carries the id)
   *
   * `unwrap` normalizes all three into one typed event frame
-  * `(seq, key, op, row)` in a single projection — no shuffle, codegen'd
-  * `from_json`, so at scale this runs at parquet/Kafka scan speed. The
-  * delete duality (rewrite records AND tombstones, which coexist because
-  * `drop.tombstones=false`, `terraform/main.tf:255`) is folded into one
-  * `op = 'd'` so downstream materialization cannot resurrect deleted keys.
+  * `(seq, key, op, row)` with one `from_json` per event — no shuffle,
+  * codegen'd projections, so at scale this runs at parquet/Kafka scan
+  * speed. The delete duality (rewrite records AND tombstones, which
+  * coexist because `drop.tombstones=false`, `terraform/main.tf:255`) is
+  * folded into one `op = 'd'` so downstream materialization cannot
+  * resurrect deleted keys.
   */
 object Unwrap {
 
@@ -27,7 +28,14 @@ object Unwrap {
     * Output: `(seq, key: Int, op: 'u'|'d', row: customerSchema|null)`.
     */
   def unwrap(raw: DataFrame): DataFrame = {
-    val j = from_json(col("value"), CdcModel.wireSchema)
+    // Parse in a projection of its own, below the field derivations.
+    // Inline, Catalyst's JSON optimisation narrows every `getField` of the
+    // parse into a `from_json` of its own, one parse per derived field; as
+    // a column referenced several times, the parse is kept apart by
+    // CollapseProject and runs once per event.
+    val parsed = raw.select(col("seq"), col("key"), col("value"),
+      from_json(col("value"), CdcModel.wireSchema).as("__j"))
+    val j = col("__j")
     val flatRow = struct(
       j.getField("id").as("id"),
       j.getField("full_name").as("full_name"),
@@ -37,7 +45,7 @@ object Unwrap {
       j.getField("created_at").as("created_at"))
     val isTombstone = col("value").isNull
     val isDeleteRewrite = j.getField("op") === "d"
-    raw.select(
+    parsed.select(
       col("seq"),
       when(isTombstone, col("key").cast("int"))
         .when(isDeleteRewrite, j.getField("before").getField("id"))

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import graft.cdc.Materialize
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout}
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.util.control.NonFatal
@@ -211,9 +210,18 @@ object StreamApply {
   }
 
   /** Micro-batch merge: new state = last-write-wins over (old state ∪
-    * batch), committed with a MANIFEST POINTER — the single-pointer
-    * design every transactional table format (Delta's `_last_checkpoint`,
-    * Iceberg's `version-hint`) reduces to:
+    * batch), computed the way Delta's MERGE computes it: the batch is
+    * folded to one winner per key, then joined to the live version by a
+    * full outer shuffled hash join that builds on the fold (see
+    * [[ParquetUpsertStore.mergedFrame]]). The state side is scanned,
+    * shuffled once and streamed through the join — never sorted or
+    * aggregated — which is sound because every version holds exactly one
+    * row per key. The hash build is the folded micro-batch's share of
+    * one shuffle partition, so the source's per-trigger limit bounds its
+    * memory, not the state size. The result is committed with a MANIFEST
+    * POINTER — the single-pointer design every transactional table
+    * format (Delta's `_last_checkpoint`, Iceberg's `version-hint`)
+    * reduces to:
     *
     *   - state versions are APPEND-ONLY directories
     *     (`state_v<batchId>_e<epoch>`); nothing that is live is ever
@@ -235,10 +243,12 @@ object StreamApply {
     *     without a readable schema file still opens by inference.
     *
     * With the checkpointed source replaying at-least-once into this
-    * idempotent keyed merge, sink state is effectively-once; in
+    * idempotent keyed merge (a replayed row ties with the state row,
+    * and ties keep the state), sink state is effectively-once; in
     * production the body of `merge` is a Delta/Iceberg `MERGE WHEN
-    * MATCHED UPDATE WHEN NOT MATCHED INSERT` — same commit protocol,
-    * scaled out.
+    * MATCHED AND batch.seq > state.seq UPDATE WHEN NOT MATCHED INSERT`
+    * over the same folded batch — same plan shape, same commit
+    * protocol, scaled out.
     *
     * Concurrency contract: ONE writer at a time (Structured Streaming
     * guarantees this per checkpoint); any number of readers. Readers
@@ -259,6 +269,44 @@ object StreamApply {
       }
     }
 
+    private val cols = (key +: seq +: opCol +: payloadCols).distinct
+    private val valueCols = cols.filterNot(_ == key)
+
+    /** The frame [[merge]] writes: the live version with `batch` applied,
+      * by the fold-then-join plan described on the class. Per key the
+      * batch row wins when its `seq` is higher, the state row otherwise
+      * (ties included, so a replayed batch changes nothing). The join
+      * relies on the state holding one row per key, which every version
+      * this method writes does.
+      */
+    private[streaming] def mergedFrame(batch: DataFrame): DataFrame = {
+      // The fold: one winner per key (highest `seq`), keyed by `__k` =
+      // `struct(key)`, with the winner's other columns packed in `__b`.
+      // Spark compares structs field by field with nulls equal, so a null
+      // key is one group here and matches a null state key in the join,
+      // which keys on this same `__k` column: the fold's shuffle already
+      // partitions the batch for the join. The key field is made nullable,
+      // as in every version read back, so the join compares `__k` uncast
+      // and keeps that partitioning.
+      val keyType = StructType(Seq(StructField(key, batch.schema(key).dataType)))
+      val folded = batch.groupBy(struct(col(key)).cast(keyType).as("__k"))
+        .agg(max_by(struct(valueCols.map(col): _*), col(seq)).as("__b"))
+      manifest.currentVersion() match {
+        case None =>
+          folded.select(col(s"__k.$key").as(key) +:
+            valueCols.map(c => col(s"__b.$c").as(c)): _*)
+        case Some(v) =>
+          val state = manifest.open(spark, v)
+          val joined = folded.hint("shuffle_hash")
+            .join(state, folded("__k") === struct(state(key)), "full_outer")
+          val takeBatch = col("__b").isNotNull &&
+            (state(seq).isNull || col(s"__b.$seq") > state(seq))
+          joined.select(coalesce(col(s"__k.$key"), state(key)).as(key) +:
+            valueCols.map(c =>
+              when(takeBatch, col(s"__b.$c")).otherwise(state(c)).as(c)): _*)
+      }
+    }
+
     /** Merge one micro-batch. Deletes must be retained IN the state (not
       * dropped) so a later replay of an older batch cannot resurrect a
       * deleted key; the serving view filters them. The epoch suffix makes
@@ -268,13 +316,7 @@ object StreamApply {
       */
     def merge(batch: DataFrame, batchId: Long): Unit = {
       manifest.clean()
-      val cols = (key +: seq +: opCol +: payloadCols).distinct
-      val incoming = batch.select(cols.map(col): _*)
-      val merged = manifest.currentVersion() match {
-        case Some(v) => manifest.open(spark, v).unionByName(incoming)
-        case None    => incoming
-      }
-      val next = Materialize.latestByKey(merged, key, seq, Seq(opCol) ++ payloadCols)
+      val next = mergedFrame(batch)
       val ver = manifest.nextVersionName(batchId)
       manifest.write(next, ver)
       manifest.commitPointer(ver) // the single atomic step

@@ -2,6 +2,7 @@ package graft.cdc
 
 import graft.SparkSpec
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.functions._
 
 /** The three wire shapes of SURVEY.md §1.2, end-to-end through
@@ -60,6 +61,13 @@ class UnwrapSpec extends SparkSpec {
     val back = Unwrap.unwrap(wire).collect().head
     assert(back.getInt(1) == 8 && back.getString(2) == "u")
     assert(back.getAs[Row]("row").getAs[String]("full_name") == "Zoe")
+  }
+
+  test("unwrap parses each event once") {
+    // an RDD source, so the optimizer cannot fold the plan into a local relation
+    val plan = Unwrap.unwrap(spark.createDataFrame(raw.rdd, raw.schema)).queryExecution.optimizedPlan
+    val parses = plan.flatMap(_.expressions.flatMap(_.collect { case j: JsonToStructs => j }))
+    assert(parses.size == 1, s"${parses.size} JSON parses in:\n$plan")
   }
 
   test("unwrap is a single shuffle-free projection") {

@@ -91,8 +91,13 @@ class ManifestSchemaSpec extends SparkSpec {
       flat.view().queryExecution.executedPlan
     }
     assert(openJobs == 0, s"snapshot()/view() submitted $openJobs jobs")
+    // one job per shuffle map stage of the merge plan (state, folded
+    // batch), plus the write; a footer-inference job would make it 4
+    val mapStages = MergePlanSpec.shuffles(flat.mergedFrame(b2).queryExecution.executedPlan)
+    assert(mapStages == 2, s"merge plan has $mapStages shuffles, expected 2")
     val mergeJobs = jobsDuring(flat.merge(b2, 1))
-    assert(mergeJobs <= 2, s"merge submitted $mergeJobs jobs, expected map stage + write")
+    assert(mergeJobs == mapStages + 1,
+      s"merge submitted $mergeJobs jobs, expected $mapStages map stages + write")
 
     val ivmDir = Files.createTempDirectory("graft-schema-jobs-ivm").toString
     val ivm = ivmStore(ivmDir)
