@@ -92,7 +92,7 @@ private[graft] object StreamFeeds {
       payloadCols = Seq("cat", "value"), aggCol = "cat")
     val in = MemoryStream[BenchCatEv](SourceParts)
     val q = streaming.StreamApply.withStreamShuffle(spark)(
-      streaming.StreamApply.ivmWriter(in.toDF(), store, s"$dir/ckpt").start())
+      streaming.StreamApply.batchSink(in.toDF(), s"$dir/ckpt")(store.merge).start())
     val batches = (0 until n).map(catEv(_, nKeys)).pipe(StreamFeeds.batched(_, nBatches))
     val t0 = System.nanoTime()
     try batches.foreach { b => in.addData(b); q.processAllAvailable() }
@@ -172,7 +172,8 @@ private[graft] object StreamFeeds {
 object ProbeMain {
   def main(args: Array[String]): Unit = {
     val p = Bench.hostLoad()
-    println(s"""{"loadavg1":${p.la},"probe_miters":${p.mips1},"allcore_miters":${p.mipsAll}}""")
+    println(Bench.json(Bench.obj(
+      "loadavg1" -> p.la, "probe_miters" -> p.mips1, "allcore_miters" -> p.mipsAll)))
   }
 }
 
@@ -339,23 +340,10 @@ object Bench {
         val (ok1, t1) = p1(k); val (ok2, t2) = p2(k)
         k -> (ok1 && ok2, math.min(t1, t2))
       }.toMap
-    // a failed query reports -1, never a misleading fast timing.
-    // When the batch passes are SKIPPED (SPARK_GRAFT_BATCH=0) the map is
-    // marked "skipped", NOT zero-filled: the r10 streaming-only artifact
-    // recorded 237 'successful' 0.0 s entries and any per-query diff
-    // against a prior BENCH_FULL read them as a 100% regression-to-zero.
-    val qs =
-      if (skipBatch) "\"skipped\""
-      else results.toSeq.sortBy(_._1)
-        .map { case (k, (ok, v)) => s"\"" + k + "\":" + (if (ok) v else -1.0) }
-        .mkString("{", ",", "}")
-    val errs = results.collect { case (k, (false, _)) => "\"" + k + "\"" }
-    val total = results.values.collect { case (true, v) => v }.sum
-    val errField = if (errs.isEmpty) "" else s""","errors":${errs.mkString("[", ",", "]")}"""
     // SPARK_GRAFT_STREAMING=0 skips the dials: they are SF-independent
     // (synthetic MemoryStream feeds), so scale-sweep artifacts (BENCH_sf1)
     // exclude them rather than re-measure the same numbers at 4 reps each
-    val dials: Seq[(String, Double, String)] =
+    val dials: Seq[(String, Double, JsonObj)] =
       if (sys.env.get("SPARK_GRAFT_STREAMING").contains("0")) Seq.empty
       else streamingMetrics(spark)
     // Post-dials fleet maintenance (untimed): the dials just accreted
@@ -364,55 +352,31 @@ object Bench {
     // exercised against a real freshly-written fleet every round, and
     // record what it did. View identity across the rewrite is the
     // MaintenanceJobSpec's contract; here we only report.
-    val maintField =
-      if (dials.isEmpty) ""
-      else try {
+    val maintenance =
+      if (dials.isEmpty) None
+      else Some(try {
         val root = StreamFeeds.storesRoot.toString
         // census BEFORE the rewrite pass: stores_committed + files_live
         // make the 0-compactions shape self-describing ("n stores, all
         // already at target" vs "saw nothing") — files_before/after
         // still cover only the stores actually rewritten
         val census = streaming.StreamApply.storeCensus(root)
-        val filesLive = census.flatMap(_._2).sum
         val compacted = streaming.StreamApply.compactStores(spark, root)
-        val total = (compacted.map(_._2).sum, compacted.map(_._3).sum)
-        s""","maintenance":{"stores_seen":${census.size},"stores_committed":${census.count(_._2.nonEmpty)},"files_live":$filesLive,"stores_compacted":${compacted.size},"files_before":${total._1},"files_after":${total._2}}"""
+        obj("stores_seen" -> census.size,
+          "stores_committed" -> census.count(_._2.nonEmpty),
+          "files_live" -> census.flatMap(_._2).sum,
+          "stores_compacted" -> compacted.size,
+          "files_before" -> compacted.map(_._2).sum,
+          "files_after" -> compacted.map(_._3).sum)
       } catch { case scala.util.control.NonFatal(e) =>
         // an explicit error field, never the 0/0 shape (r12 ADVICE): a
         // crashed or half-done compaction must not read as "the walk
         // found nothing / nothing needed doing"
-        val msg = (s"${e.getClass.getName}: ${e.getMessage}")
-          .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)
-        s""","maintenance":{"error":"$msg"}"""
-      }
+        obj("error" -> s"${e.getClass.getName}: ${e.getMessage}".take(200))
+      })
     val probePost = hostLoad()
-    // `sliding_wm` (not the r1-r8 `sliding` key): round 9 redefined the
-    // workload (event time +100 ms/row with 10-min lateness vs the prior
-    // 1 ms feed), so the renamed key stops old and new numbers from ever
-    // being diffed as the same series.
-    val streamField =
-      if (dials.isEmpty) ""
-      else dials.map { case (k, v, _) => s""""$k":$v""" }
-        .mkString(""","streaming":{""", ",", "}")
-    // Per-dial host markers go to the FULL artifact only — 11 markers are
-    // ~1.3 KB and the compact stdout line must fit the harness tail window
-    val streamMarkersField =
-      if (dials.isEmpty) ""
-      else dials.map { case (k, _, m) => s""""$k":$m""" }
-        .mkString(""","streaming_markers":{""", ",", "}")
-    val hostField =
-      s""","host":{"loadavg1_pre":${probePre.la},"probe_miters_pre":${probePre.mips1},"allcore_miters_pre":${probePre.mipsAll},"loadavg1_post":${probePost.la},"probe_miters_post":${probePost.mips1},"allcore_miters_post":${probePost.mipsAll}}"""
-
-    // The harness that invokes this main keeps only the LAST ~2000 chars of
-    // stdout, and the full per-query map (~100 queries) is ~3 KB — a single
-    // full line can never be machine-read there (r1-r3 all recorded
-    // parsed:null). Split the report: the complete full-precision JSON goes
-    // to BENCH_FULL.json in the repo root, and stdout gets ONE compact line
-    // (total, per-family second sums, the slowest queries, streaming rates,
-    // and a pointer to the full file) sized to survive the tail window.
-    val batchField = if (skipBatch) s""","batch":"skipped"""" else ""
-    val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"$batchField$errField$streamField$streamMarkersField$maintField$hostField}"""
+    val (fullJson, compact) = reports(sfDir, results, skipBatch, dials, maintenance,
+      obj(probeFields(probePre, probePost): _*))
     // resolve(), not Paths.get(dir, out): Paths.get CONCATENATES, so an
     // absolute SPARK_GRAFT_OUT=/tmp/x became /root/repo/tmp/x and the
     // write crashed AFTER the 10-minute measurement run, losing it all
@@ -422,22 +386,83 @@ object Bench {
     java.nio.file.Files.write(fullPath,
       (fullJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
+    spark.stop() // stop BEFORE printing: no shutdown log line may follow
+    println(compact)
+  }
+
+  /** A JSON object as [[json]] writes it. */
+  private[graft] type JsonObj = java.util.Map[String, Any]
+
+  /** A JSON object whose fields keep the given order. */
+  private[graft] def obj(fields: (String, Any)*): JsonObj = {
+    val m = new java.util.LinkedHashMap[String, Any]
+    fields.foreach { case (k, v) => m.put(k, v) }
+    m
+  }
+
+  /** `v` as JSON text, written by Jackson, which escapes every string. */
+  private[graft] def json(v: Any): String =
+    new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(v)
+
+  /** The pre/post host-probe fields every host marker carries. */
+  private def probeFields(pre: HostProbe, post: HostProbe): Seq[(String, Any)] = Seq(
+    "loadavg1_pre" -> pre.la, "probe_miters_pre" -> pre.mips1,
+    "allcore_miters_pre" -> pre.mipsAll, "loadavg1_post" -> post.la,
+    "probe_miters_post" -> post.mips1, "allcore_miters_post" -> post.mipsAll)
+
+  /** The run's two reports: the full object for `BENCH_FULL.json` and
+    * the compact stdout line.
+    *
+    * The harness that invokes [[main]] keeps only the LAST ~2000 chars of
+    * stdout, and the full per-query map (~100 queries) is ~3 KB — a single
+    * full line can never be machine-read there (r1-r3 all recorded
+    * parsed:null). So the complete full-precision object goes to the file,
+    * and stdout gets ONE compact line (total, per-family second sums, the
+    * slowest queries, streaming rates, and a pointer to the full file)
+    * sized to survive the tail window; per-dial host markers (~1.3 KB) go
+    * to the file only.
+    *
+    * A failed query reports -1, never a misleading fast timing. When the
+    * batch passes are SKIPPED (SPARK_GRAFT_BATCH=0) the query map is
+    * marked "skipped", NOT zero-filled: the r10 streaming-only artifact
+    * recorded 237 'successful' 0.0 s entries and any per-query diff
+    * against a prior BENCH_FULL read them as a 100% regression-to-zero.
+    */
+  private[graft] def reports(sfDir: String, results: Map[String, (Boolean, Double)],
+      skipBatch: Boolean, dials: Seq[(String, Double, JsonObj)],
+      maintenance: Option[JsonObj], host: JsonObj): (String, String) = {
+    import scala.jdk.CollectionConverters._
     def r3(v: Double) = math.rint(v * 1000) / 1000
+    val total = results.values.collect { case (true, v) => v }.sum
+    val errs = results.collect { case (k, (false, _)) => k }.toSeq
+    val shared =
+      (if (skipBatch) Seq("batch" -> "skipped") else Nil) ++
+        (if (errs.isEmpty) Nil else Seq("errors" -> errs.asJava)) ++
+        (if (dials.isEmpty) Nil
+         else Seq("streaming" -> obj(dials.map { case (k, v, _) => k -> v }: _*)))
+    val queries =
+      if (skipBatch) "skipped"
+      else obj(results.toSeq.sortBy(_._1)
+        .map { case (k, (ok, v)) => k -> (if (ok) v else -1.0) }: _*)
+    val full = obj(Seq("metric" -> "total", "value" -> total, "unit" -> "sec",
+      "queries" -> queries, "sf" -> sfDir) ++ shared ++
+      (if (dials.isEmpty) Nil
+       else Seq("streaming_markers" -> obj(dials.map { case (k, _, m) => k -> m }: _*))) ++
+      maintenance.map("maintenance" -> _) :+ ("host" -> host): _*)
     val families = results.toSeq
       .map { case (k, (ok, v)) => (k.takeWhile(!_.isDigit), if (ok) v else 0.0) }
       .groupMapReduce(_._1)(_._2)(_ + _)
       .toSeq.sortBy(_._1)
-      .map { case (f, v) => s"\"$f\":${r3(v)}" }
-      .mkString("{", ",", "}")
+      .map { case (f, v) => f -> r3(v) }
     val slowest = results.toSeq.collect { case (k, (true, v)) => (k, v) }
       .sortBy(-_._2).take(15)
-      .map { case (k, v) => s"\"$k\":${r3(v)}" }
-      .mkString("{", ",", "}")
-    val compact =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","n_queries":${results.size},"queries":$slowest,"queries_note":"slowest 15 of ${results.size}; all in BENCH_FULL.json","families":$families$batchField$errField$streamField$hostField,"detail":"BENCH_FULL.json"}"""
-
-    spark.stop() // stop BEFORE printing: no shutdown log line may follow
-    println(compact)
+      .map { case (k, v) => k -> r3(v) }
+    val compact = obj(Seq("metric" -> "total", "value" -> r3(total), "unit" -> "sec",
+      "sf" -> sfDir, "n_queries" -> results.size, "queries" -> obj(slowest: _*),
+      "queries_note" -> s"slowest 15 of ${results.size}; all in BENCH_FULL.json",
+      "families" -> obj(families: _*)) ++ shared :+ ("host" -> host) :+
+      ("detail" -> "BENCH_FULL.json"): _*)
+    (json(full), json(compact))
   }
 
   /** Streaming throughput (rows/s) through the three hot streaming paths
@@ -452,7 +477,7 @@ object Bench {
     * `median3` below for why). A failed stream reports -1.
     */
   private def streamingMetrics(spark: SparkSession)
-      : Seq[(String, Double, String)] = {
+      : Seq[(String, Double, JsonObj)] = {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -794,8 +819,8 @@ object Bench {
         if (probeSteady <= 0) 1.0
         else math.min(pre.mipsAll, post.mipsAll) / probeSteady
       def surged: Boolean = headroom < 0.85
-      def marker: String =
-        s"""{"loadavg1_pre":${pre.la},"probe_miters_pre":${pre.mips1},"allcore_miters_pre":${pre.mipsAll},"loadavg1_post":${post.la},"probe_miters_post":${post.mips1},"allcore_miters_post":${post.mipsAll},"waited_sec":$waited,"attempt":$attempt}"""
+      def marker: JsonObj =
+        obj(probeFields(pre, post) :+ ("waited_sec" -> waited) :+ ("attempt" -> attempt): _*)
     }
     def measure(f: () => Double, attempt: Int): Attempt = {
       var waited = 0
@@ -828,6 +853,10 @@ object Bench {
       Attempt(rate, pre, post, waited, attempt)
     }
 
+    // `sliding_wm` (not the r1-r8 `sliding` key): round 9 redefined the
+    // workload (event time +100 ms/row with 10-min lateness vs the prior
+    // 1 ms feed), so the renamed key stops old and new numbers from ever
+    // being diffed as the same series.
     val allDials: Seq[(String, () => Double)] = Seq(
       ("upsert_rows_per_sec", () => timeUpsert(100000, 10000, 5)),
       ("dedup_rows_per_sec", () => timeDedup(100000, 10000, 5)),

@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
   * That rationale is for folding an event history. It does not cover
   * merging a micro-batch into a store that already holds one row per
   * key: there the partial aggregate reduces nothing on the state side,
-  * so `StreamApply.ParquetUpsertStore` folds only the batch and
-  * hash-joins the fold to the state instead of calling [[latestByKey]]
-  * over both.
+  * so both streaming stores (`StreamApply.ParquetUpsertStore` and
+  * `IvmUpsertStore`) fold only the batch and hash-join the fold to the
+  * state, in one shared merge, instead of aggregating over both.
   */
 object Materialize {
 

@@ -86,9 +86,5 @@ object AnnStream {
     */
   def annWriter(cdc: DataFrame, store: Store,
       checkpoint: String): DataStreamWriter[Row] =
-    cdc.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((batch: DataFrame, id: Long) =>
-        applyBatch(batch, id, store))
+    StreamApply.batchSink(cdc, checkpoint)(applyBatch(_, _, store))
 }

@@ -119,9 +119,5 @@ object LabelStream {
     */
   def labelWriter(docsStream: DataFrame, stores: Stores,
       checkpoint: String): DataStreamWriter[Row] =
-    docsStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((batch: DataFrame, id: Long) =>
-        applyBatch(batch, id, stores))
+    StreamApply.batchSink(docsStream, checkpoint)(applyBatch(_, _, stores))
 }

@@ -82,9 +82,5 @@ object PercolateStream {
     */
   def percolateWriter(docsStream: DataFrame, a: Alerts, queries: DataFrame,
       checkpoint: String): DataStreamWriter[Row] =
-    docsStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((batch: DataFrame, id: Long) =>
-        applyBatch(batch, id, a, queries))
+    StreamApply.batchSink(docsStream, checkpoint)(applyBatch(_, _, a, queries))
 }

@@ -112,9 +112,5 @@ object PostingsStream {
     */
   def postingsWriter(docsStream: DataFrame, stores: Stores,
       checkpoint: String): DataStreamWriter[Row] =
-    docsStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((batch: DataFrame, id: Long) =>
-        applyBatch(batch, id, stores))
+    StreamApply.batchSink(docsStream, checkpoint)(applyBatch(_, _, stores))
 }

@@ -63,14 +63,11 @@ object QualityStream {
   def gatedSink(events: DataFrame, clean: StreamApply.ParquetUpsertStore,
       dlq: StreamApply.ParquetUpsertStore, checkpoint: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val bad = col("op") =!= "d" && violates(col("value"), col("event_type"))
-        dlq.merge(batch.filter(bad), id)
-        clean.merge(batch.filter(!bad), id)
-      }
+    StreamApply.batchSink(events, checkpoint) { (batch, id) =>
+      val bad = col("op") =!= "d" && violates(col("value"), col("event_type"))
+      dlq.merge(batch.filter(bad), id)
+      clean.merge(batch.filter(!bad), id)
+    }
 
   def complianceView(events: DataFrame, latenessMinutes: Long = 60L): DataFrame =
     events

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
@@ -14,7 +14,7 @@ import scala.util.control.NonFatal
   * events in arrival order; its Spark equivalent is a streaming query per
   * concern:
   *
-  *   - [[upsertWriter]]: `foreachBatch` + last-write-wins merge — the
+  *   - [[upsertWriter]]: [[batchSink]] + last-write-wins merge — the
   *     OpenSearch upsert-by-`_id` analog. Checkpointing replaces the
   *     consumer group (O13): at-least-once redelivery + an idempotent
   *     keyed merge onto [[ParquetUpsertStore]]'s atomic manifest-pointer
@@ -209,19 +209,57 @@ object StreamApply {
     }
   }
 
-  /** Micro-batch merge: new state = last-write-wins over (old state ∪
-    * batch), computed the way Delta's MERGE computes it: the batch is
-    * folded to one winner per key, then joined to the live version by a
-    * full outer shuffled hash join that builds on the fold (see
-    * [[ParquetUpsertStore.mergedFrame]]). The state side is scanned,
-    * shuffled once and streamed through the join — never sorted or
-    * aggregated — which is sound because every version holds exactly one
-    * row per key. The hash build is the folded micro-batch's share of
-    * one shuffle partition, so the source's per-trigger limit bounds its
-    * memory, not the state size. The result is committed with a MANIFEST
-    * POINTER — the single-pointer design every transactional table
-    * format (Delta's `_last_checkpoint`, Iceberg's `version-hint`)
-    * reduces to:
+  /** The last-write-wins merge both stores write: `state` with `batch`
+    * applied, computed the way Delta's MERGE computes it. The batch is
+    * folded to one winner per key (highest `seq`), then joined to the
+    * live version by a full outer shuffled hash join that builds on the
+    * fold. Per key the batch row wins when its `seq` is higher, the state
+    * row otherwise (ties included, so a replayed batch changes nothing).
+    * The state side is scanned, shuffled once and streamed through the
+    * join, never sorted or aggregated, which is sound because every
+    * version this merge writes holds exactly one row per key. The hash
+    * build is the folded micro-batch's share of one shuffle partition, so
+    * the source's per-trigger limit bounds its memory, not the state
+    * size. With no live version (`state` empty) the fold alone is the
+    * result.
+    *
+    * The output is `key`, then `valueCols`, then `extra(touched)`:
+    * columns the caller projects from the same join, where `touched` is
+    * true for keys the batch holds a row for. A column of `state` is the
+    * pre-merge row there (null for a key the state lacks).
+    */
+  private def lastWriteWins(batch: DataFrame, state: Option[DataFrame],
+      key: String, seq: String, valueCols: Seq[String],
+      extra: Column => Seq[Column] = _ => Nil): DataFrame = {
+    // The fold: one winner per key, keyed by `__k` = `struct(key)`, with
+    // the winner's other columns packed in `__b`. Spark compares structs
+    // field by field with nulls equal, so a null key is one group here
+    // and matches a null state key in the join, which keys on this same
+    // `__k` column: the fold's shuffle already partitions the batch for
+    // the join. The key field is made nullable, as in every version read
+    // back, so the join compares `__k` uncast and keeps that partitioning.
+    val keyType = StructType(Seq(StructField(key, batch.schema(key).dataType)))
+    val folded = batch.groupBy(struct(col(key)).cast(keyType).as("__k"))
+      .agg(max_by(struct(valueCols.map(col): _*), col(seq)).as("__b"))
+    state match {
+      case None =>
+        folded.select((col(s"__k.$key").as(key) +:
+          valueCols.map(c => col(s"__b.$c").as(c))) ++ extra(lit(true)): _*)
+      case Some(s) =>
+        val joined = folded.hint("shuffle_hash")
+          .join(s, folded("__k") === struct(s(key)), "full_outer")
+        val takeBatch = col("__b").isNotNull &&
+          (s(seq).isNull || col(s"__b.$seq") > s(seq))
+        joined.select((coalesce(col(s"__k.$key"), s(key)).as(key) +:
+          valueCols.map(c => when(takeBatch, col(s"__b.$c")).otherwise(s(c)).as(c))) ++
+          extra(col("__b").isNotNull): _*)
+    }
+  }
+
+  /** A keyed store merged by [[lastWriteWins]]. Each merge writes a new
+    * version and commits it with a MANIFEST POINTER — the
+    * single-pointer design every transactional table format (Delta's
+    * `_last_checkpoint`, Iceberg's `version-hint`) reduces to:
     *
     *   - state versions are APPEND-ONLY directories
     *     (`state_v<batchId>_e<epoch>`); nothing that is live is ever
@@ -272,40 +310,12 @@ object StreamApply {
     private val cols = (key +: seq +: opCol +: payloadCols).distinct
     private val valueCols = cols.filterNot(_ == key)
 
-    /** The frame [[merge]] writes: the live version with `batch` applied,
-      * by the fold-then-join plan described on the class. Per key the
-      * batch row wins when its `seq` is higher, the state row otherwise
-      * (ties included, so a replayed batch changes nothing). The join
-      * relies on the state holding one row per key, which every version
-      * this method writes does.
+    /** The frame [[merge]] writes: the live version with `batch` applied
+      * by [[lastWriteWins]].
       */
-    private[streaming] def mergedFrame(batch: DataFrame): DataFrame = {
-      // The fold: one winner per key (highest `seq`), keyed by `__k` =
-      // `struct(key)`, with the winner's other columns packed in `__b`.
-      // Spark compares structs field by field with nulls equal, so a null
-      // key is one group here and matches a null state key in the join,
-      // which keys on this same `__k` column: the fold's shuffle already
-      // partitions the batch for the join. The key field is made nullable,
-      // as in every version read back, so the join compares `__k` uncast
-      // and keeps that partitioning.
-      val keyType = StructType(Seq(StructField(key, batch.schema(key).dataType)))
-      val folded = batch.groupBy(struct(col(key)).cast(keyType).as("__k"))
-        .agg(max_by(struct(valueCols.map(col): _*), col(seq)).as("__b"))
-      manifest.currentVersion() match {
-        case None =>
-          folded.select(col(s"__k.$key").as(key) +:
-            valueCols.map(c => col(s"__b.$c").as(c)): _*)
-        case Some(v) =>
-          val state = manifest.open(spark, v)
-          val joined = folded.hint("shuffle_hash")
-            .join(state, folded("__k") === struct(state(key)), "full_outer")
-          val takeBatch = col("__b").isNotNull &&
-            (state(seq).isNull || col(s"__b.$seq") > state(seq))
-          joined.select(coalesce(col(s"__k.$key"), state(key)).as(key) +:
-            valueCols.map(c =>
-              when(takeBatch, col(s"__b.$c")).otherwise(state(c)).as(c)): _*)
-      }
-    }
+    private[streaming] def mergedFrame(batch: DataFrame): DataFrame =
+      lastWriteWins(batch, manifest.currentVersion().map(manifest.open(spark, _)),
+        key, seq, valueCols)
 
     /** Merge one micro-batch. Deletes must be retained IN the state (not
       * dropped) so a later replay of an older batch cannot resurrect a
@@ -456,23 +466,37 @@ object StreamApply {
       }
     }
 
-  /** foreachBatch upsert writer over a normalized CDC event stream. */
-  def upsertWriter(events: DataFrame, store: ParquetUpsertStore,
-      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
+  /** The one `foreachBatch` sink every CDC stream writes through:
+    * `apply` runs once per micro-batch with the batch id, and the
+    * checkpoint at `checkpoint` redelivers a batch at least once, so
+    * `apply` must be an idempotent keyed write (a store merge is) for
+    * sink state to be effectively-once — the sink contract of
+    * Structured Streaming (SIGMOD 2018), stated once. Every input is
+    * stateless, for which append and update emit the same rows; update
+    * is the upsert's own mode and also admits an aggregated input.
+    */
+  def batchSink(events: DataFrame, checkpoint: String)(
+      apply: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     events.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch((batch: DataFrame, id: Long) => store.merge(batch, id))
+      .foreachBatch(apply)
+
+  /** foreachBatch upsert writer over a normalized CDC event stream. */
+  def upsertWriter(events: DataFrame, store: ParquetUpsertStore,
+      checkpoint: String): DataStreamWriter[Row] =
+    batchSink(events, checkpoint)(store.merge)
 
   /** Streaming incremental view maintenance — the streaming twin of the
     * batch `o17` operator: the store keeps BOTH the keyed state and a
     * maintained aggregate (live keys per `aggCol` value), and each
     * micro-batch updates the aggregate from signed deltas over the
-    * batch's keys only: the state merge EMITS ITS OWN CHANGELOG (the old
-    * winner's op/value recorded in extra columns of the written row, a
-    * touched flag marking batch-affected keys), and the delta unfolds
-    * from one pruned scan of the touched rows — never rescanning the
-    * full state, never re-deriving the merge.
+    * batch's keys only. The state merge is the flat store's
+    * [[lastWriteWins]], and it EMITS ITS OWN CHANGELOG: three columns
+    * projected from the same join record the old winner's op and
+    * `aggCol` value and whether the batch touched the key, so the delta
+    * unfolds from one pruned scan of the touched rows — never rescanning
+    * the full state, never re-deriving the merge.
     *
     * Both tables live in the SAME version directory (`state/`, `agg/`)
     * and commit with the ONE pointer rename, so they can never diverge:
@@ -492,6 +516,8 @@ object StreamApply {
     private def stateAt(v: String): DataFrame = manifest.open(spark, v, "state")
     private def aggAt(v: String): DataFrame = manifest.open(spark, v, "agg")
 
+    private val valueCols = (seq +: opCol +: payloadCols).distinct.filterNot(_ == key)
+
     /** Live (non-deleted) keyed state (changelog columns stripped). */
     def view(): DataFrame = manifest.currentVersion() match {
       case Some(v) => stateAt(v).filter(col(opCol) =!= deleteOp)
@@ -505,59 +531,38 @@ object StreamApply {
       case None    => spark.emptyDataFrame
     }
 
+    /** The state table [[merge]] writes: [[lastWriteWins]] of `batch` onto
+      * the live state, with the changelog columns `__old_op` and
+      * `__old_cat` (the pre-merge row's `opCol` and `aggCol`, null for a
+      * new key) and `__touched` (1 for a key the batch holds a row for,
+      * else 0). Recording the old winner in the row the merge already
+      * writes is what spares the delta a second scan of the old state, a
+      * distinct-keys broadcast job and a semi join per micro-batch: those
+      * per-batch fixed costs, not per-row work, dominated
+      * `ivm_rows_per_sec` (PLANS.md "Round-8 plan audit").
+      */
+    private[streaming] def stateFrame(batch: DataFrame): DataFrame = {
+      val state = manifest.currentVersion().map(stateAt)
+      def old(c: String): Column =
+        state.fold(lit(null).cast(batch.schema(c).dataType))(_(c))
+      lastWriteWins(batch, state, key, seq, valueCols, touched => Seq(
+        old(opCol).as("__old_op"), old(aggCol).as("__old_cat"),
+        when(touched, 1).otherwise(0).as("__touched")))
+    }
+
     def merge(batch: DataFrame, batchId: Long): Unit = {
       manifest.clean()
-      val cols = (key +: seq +: opCol +: payloadCols).distinct
-      val incoming = batch.select(cols.map(col): _*)
-      val live = manifest.currentVersion()
-      val curState = live.map(stateAt(_).select(cols.map(col): _*))
-        .getOrElse(incoming.limit(0))
-      val curAgg = live.map(aggAt).getOrElse(
-        incoming.select(col(aggCol)).limit(0).withColumn("n", lit(0L)))
-      // The state merge emits ITS OWN CHANGELOG (the round-8 shape —
-      // Delta's change-data-feed idea reduced to this store): the one
-      // per-key aggregation that picks the new winner ALSO records, in
-      // extra columns of the same written row, the OLD winner's (op,
-      // aggCol) — a conditional max_by over the state-origin rows only —
-      // and whether the key was touched by this batch. The aggregate
-      // delta then needs exactly one pruned scan of the just-written
-      // state (filter `__touched`, pushed to parquet): no second scan of
-      // the old state, no distinct-keys broadcast job, no semi join.
-      // Round-7's shape paid all three per micro-batch, and the A/B
-      // (PLANS.md "Round-8 plan audit", 2 vs 10 batches) showed
-      // per-batch FIXED cost — not per-row work — dominating
-      // ivm_rows_per_sec.
-      //
-      // Replay stays self-cancelling with no batch-id bookkeeping: a
-      // replayed batch finds the state-origin winner already equal to
-      // the merged winner (last-write-wins is idempotent; redelivered
-      // rows are byte-identical), so −old and +new cancel per key.
-      val tagged = curState.withColumn("__origin", lit(0))
-        .unionByName(incoming.withColumn("__origin", lit(1)))
-      val packed = struct((seq +: opCol +: payloadCols).distinct.map(col): _*)
-      val payload = (seq +: opCol +: payloadCols).distinct
-      val merged = tagged.groupBy(col(key))
-        .agg(
-          max_by(packed, col(seq)).as("__last"),
-          // old winner: max_by ignores rows whose ordering value is null,
-          // so conditioning the ordering on origin restricts the argmax
-          // to the pre-merge state without a second scan
-          max_by(struct(col(opCol).as("op"), col(aggCol).as("cat")),
-            when(col("__origin") === 0, col(seq))).as("__old"),
-          max(col("__origin")).as("__touched"))
-        .select(col(key) +:
-          payload.map(c => col(s"__last.$c").as(c)) :+
-          col("__old.op").as("__old_op") :+
-          col("__old.cat").as("__old_cat") :+
-          col("__touched"): _*)
+      val curAgg = manifest.currentVersion().map(aggAt).getOrElse(
+        batch.select(col(aggCol)).limit(0).withColumn("n", lit(0L)))
       val ver = manifest.nextVersionName(batchId)
-      manifest.write(merged, ver, "state")
+      manifest.write(stateFrame(batch), ver, "state")
       // Signed delta from the changelog columns alone: −1 for the old
       // winner's value if it was live, +1 for the new winner's if live —
-      // both rows unfolded from the ONE touched-state row. Reading the
-      // just-written bytes (the ones the pointer is about to publish)
-      // keeps the merge single-evaluation without pinning state in
-      // executor memory (the round-6/7 trade, unchanged).
+      // both rows unfolded from the ONE touched-state row. A replayed
+      // batch leaves every touched row as it was, so its −1 and +1
+      // cancel. Reading the just-written bytes (the ones the pointer is
+      // about to publish) keeps the merge single-evaluation without
+      // pinning state in executor memory.
       val st = stateAt(ver)
         .filter(col("__touched") === 1)
         .select(col(aggCol), col(opCol), col("__old_op"), col("__old_cat"))
@@ -583,14 +588,6 @@ object StreamApply {
       manifest.clean()
     }
   }
-
-  /** foreachBatch writer maintaining state + aggregate incrementally. */
-  def ivmWriter(events: DataFrame, store: IvmUpsertStore,
-      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((batch: DataFrame, id: Long) => store.merge(batch, id))
 
   /** The SHARE GATE as a stream — the completion of the repo's namesake
     * ("CDC and Secure Data Sharing"): the reference provisions a
@@ -619,39 +616,36 @@ object StreamApply {
       published: ParquetUpsertStore, checkpoint: String,
       key: String = "user_id", seqCol: String = "event_id",
       opCol: String = "event_type", deleteOp: String = "error")
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // the day generalization truncates in the SESSION timezone; a
-        // streaming-only driver never touches Tables.eventsRaw's pin,
-        // so the same "first graft call pins the clock" contract is
-        // enforced here — otherwise a non-UTC session would publish
-        // different day buckets than the batch gate over the same events
-        batch.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
-        raw.merge(batch, id)
-        val touched = batch.select(col(key)).distinct()
-        val snap = raw.snapshot()
-          .join(broadcast(touched), Seq(key), "left_semi")
-        val pass = col(opCol) =!= deleteOp && graft.cdc.CdcQueries.sharePasses
-        val projected = snap.select(
-          graft.cdc.CdcQueries.shareProjection :+
-            col(seqCol).as("pub_seq") :+
-            when(pass, lit("u")).otherwise(lit("d")).as("pub_op"): _*)
-        // Tombstone rows carry NO attributes: the published store keeps
-        // deletes forever (resurrection protection), so a tombstone that
-        // retained the redacted state's (event_type, day, value_floor)
-        // would park non-shareable interaction data in the audience-side
-        // files — only the pseudonymous key and the sequence may cross
-        // the boundary with a delete.
-        val gated = projected.select(
-          col("user_token") +:
-            Seq("event_type", "day", "value_floor").map(n =>
-              when(col("pub_op") === "u", col(n)).as(n)) :+
-            col("pub_seq") :+ col("pub_op"): _*)
-        published.merge(gated, id)
-      }
+      : DataStreamWriter[Row] =
+    batchSink(events, checkpoint) { (batch, id) =>
+      // the day generalization truncates in the SESSION timezone; a
+      // streaming-only driver never touches Tables.eventsRaw's pin,
+      // so the same "first graft call pins the clock" contract is
+      // enforced here — otherwise a non-UTC session would publish
+      // different day buckets than the batch gate over the same events
+      batch.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
+      raw.merge(batch, id)
+      val touched = batch.select(col(key)).distinct()
+      val snap = raw.snapshot()
+        .join(broadcast(touched), Seq(key), "left_semi")
+      val pass = col(opCol) =!= deleteOp && graft.cdc.CdcQueries.sharePasses
+      val projected = snap.select(
+        graft.cdc.CdcQueries.shareProjection :+
+          col(seqCol).as("pub_seq") :+
+          when(pass, lit("u")).otherwise(lit("d")).as("pub_op"): _*)
+      // Tombstone rows carry NO attributes: the published store keeps
+      // deletes forever (resurrection protection), so a tombstone that
+      // retained the redacted state's (event_type, day, value_floor)
+      // would park non-shareable interaction data in the audience-side
+      // files — only the pseudonymous key and the sequence may cross
+      // the boundary with a delete.
+      val gated = projected.select(
+        col("user_token") +:
+          Seq("event_type", "day", "value_floor").map(n =>
+            when(col("pub_op") === "u", col(n)).as(n)) :+
+          col("pub_seq") :+ col("pub_op"): _*)
+      published.merge(gated, id)
+    }
 
   /** Constructor for the published (audience-side) store of
     * [[shareGateSink]]: keyed by the pseudonymous token, delete op "d",
@@ -785,6 +779,19 @@ object StreamApply {
   /** Per-key live state. */
   case class KeyState(seq: Long, value: Double, deleted: Boolean)
 
+  object KeyState {
+    /** The state of a key no event has reached. */
+    val Empty: KeyState = KeyState(Long.MinValue, 0.0, deleted = true)
+  }
+
+  /** One event applied to a key's state — the keyed views' one fold
+    * step: highest `seq` wins, a delete tombstones the key.
+    */
+  private def step(s: KeyState, e: KeyedEvent): KeyState =
+    if (e.seq <= s.seq) s // stale replay — state already newer
+    else if (e.op == "d") KeyState(e.seq, 0.0, deleted = true)
+    else KeyState(e.seq, e.value, deleted = false)
+
   /** The keyed view as CUSTOM STREAMING STATE — the
     * `mapGroupsWithState` alternative to the `foreachBatch` merge: state
     * lives in Spark's state store (shuffle-partitioned by key, bounded by
@@ -799,12 +806,7 @@ object StreamApply {
     events.groupByKey(_.key)
       .mapGroupsWithState[KeyState, (Int, KeyState)](GroupStateTimeout.NoTimeout) {
         (key, batch, state) =>
-          val init = state.getOption.getOrElse(KeyState(Long.MinValue, 0.0, deleted = true))
-          val next = batch.foldLeft(init) { (s, e) =>
-            if (e.seq <= s.seq) s // stale replay — state already newer
-            else if (e.op == "d") KeyState(e.seq, 0.0, deleted = true)
-            else KeyState(e.seq, e.value, deleted = false)
-          }
+          val next = batch.foldLeft(state.getOption.getOrElse(KeyState.Empty))(step)
           state.update(next)
           key -> next
       }
@@ -835,14 +837,7 @@ object StreamApply {
 
     override def handleInputRows(key: Int, rows: Iterator[KeyedEvent],
         tv: org.apache.spark.sql.streaming.TimerValues): Iterator[(Int, KeyState)] = {
-      val init =
-        if (state.exists()) state.get()
-        else KeyState(Long.MinValue, 0.0, deleted = true)
-      val next = rows.foldLeft(init) { (s, e) =>
-        if (e.seq <= s.seq) s // stale replay — state already newer
-        else if (e.op == "d") KeyState(e.seq, 0.0, deleted = true)
-        else KeyState(e.seq, e.value, deleted = false)
-      }
+      val next = rows.foldLeft(if (state.exists()) state.get() else KeyState.Empty)(step)
       state.update(next)
       Iterator.single(key -> next)
     }
@@ -881,12 +876,7 @@ object StreamApply {
             state.remove() // tombstone past the horizon — state evicted
             key -> last
           } else {
-            val init = state.getOption.getOrElse(KeyState(Long.MinValue, 0.0, deleted = true))
-            val next = batch.foldLeft(init) { (s, e) =>
-              if (e.seq <= s.seq) s
-              else if (e.op == "d") KeyState(e.seq, 0.0, deleted = true)
-              else KeyState(e.seq, e.value, deleted = false)
-            }
+            val next = batch.foldLeft(state.getOption.getOrElse(KeyState.Empty))(step)
             state.update(next)
             if (next.deleted) state.setTimeoutDuration(ttlMs)
             key -> next

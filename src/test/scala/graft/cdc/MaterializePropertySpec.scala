@@ -1,6 +1,6 @@
 package graft.cdc
 
-import graft.SparkSpec
+import graft.{PlannerCells, SparkSpec}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -19,7 +19,7 @@ case class PropEv(seq: Long, key: Int, op: String, value: Double)
 /** A store-merge event; `key = None` is a null key. */
 case class StoreEv(seq: Long, key: Option[Int], op: String, value: Double)
 
-class MaterializePropertySpec extends SparkSpec {
+class MaterializePropertySpec extends SparkSpec with PlannerCells {
 
   private type E = PropEv
   private val E = PropEv
@@ -78,25 +78,6 @@ class MaterializePropertySpec extends SparkSpec {
         if (e.op == "d") state - e.key
         else state.updated(e.key, (e.seq, e.value))
     }
-
-  /** The planner settings a result must not depend on. */
-  private val plannerCells: Seq[(String, Map[String, String])] = Seq(
-    "session defaults" -> Map.empty,
-    "1 shuffle partition" -> Map("spark.sql.shuffle.partitions" -> "1"),
-    "7 shuffle partitions" -> Map("spark.sql.shuffle.partitions" -> "7"),
-    "no broadcast joins" -> Map("spark.sql.autoBroadcastJoinThreshold" -> "-1"),
-    "AQE off" -> Map("spark.sql.adaptive.enabled" -> "false"),
-    "whole-stage codegen off" -> Map("spark.sql.codegen.wholeStage" -> "false"))
-
-  private def withConfs[T](confs: Map[String, String])(body: => T): T = {
-    val prior = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
 
   test("streaming store merge under any batch split == sequential fold") {
     import spark.implicits._

@@ -71,13 +71,13 @@ class IvmStreamSpec extends SparkSpec {
     assert(aggOf(store) == recompute(batch1 ++ batch2))
   }
 
-  test("streaming ivmWriter converges to the batch recompute") {
+  test("streaming IVM sink converges to the batch recompute") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val dir = Files.createTempDirectory("graft-ivm-stream").toString
     val store = mkStore(dir)
     val in = MemoryStream[CatEv]
-    val q = StreamApply.ivmWriter(in.toDF(), store, s"$dir/ckpt").start()
+    val q = StreamApply.batchSink(in.toDF(), s"$dir/ckpt")(store.merge).start()
     try {
       for (b <- Seq(batch1, batch2, batch3)) {
         in.addData(b)
