@@ -113,10 +113,30 @@ object StreamApply {
       * beside the part files. The schema file is written after the Spark
       * write, because `overwrite` recreates the directory, and before the
       * caller's [[commitPointer]], so every committed version carries it.
+      *
+      * Physical format, fixed for every store version: every column
+      * plain-encoded (no dictionary pages) and timestamps as INT64
+      * `TIMESTAMP_MICROS`, not Spark's deprecated INT96. The footer of a
+      * 100k-key CDC version (27,295 rows per file) showed parquet building
+      * dictionaries for `key`, `seq`, `full_name` and `email` and then
+      * falling back to plain encoding, and `created_at` as a 12-byte INT96
+      * dictionary of 25,918 distinct values: the merge paid for
+      * dictionaries it discarded. Plain INT64 micros also reads faster
+      * than plain INT96, which converts every value on read. The timestamp
+      * type is taken from the session conf, which Spark copies over any
+      * writer option, so it is set on the session for the write and
+      * restored after it, even when the write throws. Versions written
+      * before this format (INT96, dictionaries) open and merge unchanged:
+      * parquet readers decode either encoding under the same schema.
       */
     def write(df: DataFrame, ver: String, leaf: String = ""): Unit = {
       val path = leafPath(ver, leaf)
-      df.write.mode("overwrite").parquet(path)
+      val conf = df.sparkSession.conf
+      val tsKey = "spark.sql.parquet.outputTimestampType"
+      val prev = conf.getAll.get(tsKey) // None when unset: restore unset
+      conf.set(tsKey, "TIMESTAMP_MICROS")
+      try df.write.mode("overwrite").option("parquet.enable.dictionary", "false").parquet(path)
+      finally prev.fold(conf.unset(tsKey))(conf.set(tsKey, _))
       Files.writeString(Paths.get(path, SchemaFile), asRead(df.schema).json)
     }
 
