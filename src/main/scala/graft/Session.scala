@@ -35,15 +35,20 @@ object Session {
     sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.trim.toInt).getOrElse(cores)
 
   /** `local[cores]` with `shuffle` partitions (default: the env, see
-    * above), UTC session time zone, UI off, WARN logging. */
+    * above), UTC session time zone, UI off, WARN logging, and Hadoop's
+    * `file:` scheme bound to [[graft.io.LocalFs]] (`spark.hadoop.*`), so
+    * local file writes set permissions and stat links without forking a
+    * process. */
   def local(cores: Int = envCores, shuffle: Option[Int] = None): SparkSession = {
-    val s = SparkSession.builder()
+    val b = SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions",
         shuffle.getOrElse(envShuffle(cores)).toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+    val s = graft.io.LocalFs.Bindings
+      .foldLeft(b) { case (acc, (k, v)) => acc.config(s"spark.hadoop.$k", v) }
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

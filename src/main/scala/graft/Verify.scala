@@ -17,7 +17,7 @@ object Verify {
       .flatMap { case (name, fn) =>
         try {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
+            .options(graft.io.LocalFs.WriteOptions).parquet(s"$outDir/$name")
           None
         } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")

@@ -132,7 +132,7 @@ object CorpusIndex {
     df.repartition(n, org.apache.spark.sql.functions.col(key))
       .write.mode("overwrite")
       .bucketBy(n, key).sortBy(key)
-      .option("path", tmp.getPath)
+      .option("path", tmp.getPath).options(graft.io.LocalFs.WriteOptions)
       .format("parquet").saveAsTable(tmpTable)
     spark.sql(s"DROP TABLE IF EXISTS $tmpTable") // external: files stay
     // sidecar metadata: re-registration must not depend on data files

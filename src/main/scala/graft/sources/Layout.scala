@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.io.LocalFs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Data-layout operators: how the engine WRITES so that future scans
@@ -27,7 +28,8 @@ object Layout {
 
   /** Write hive-partitioned by `cols` (directory per value). */
   def writePartitioned(df: DataFrame, path: String, cols: String*): Unit =
-    df.write.partitionBy(cols: _*).mode("overwrite").parquet(path)
+    df.write.partitionBy(cols: _*).mode("overwrite").options(LocalFs.WriteOptions)
+      .parquet(path)
 
   /** Write range-partitioned AND sorted by `col`: global range layout
     * across files plus monotone rowgroups within each — both the file
@@ -37,7 +39,7 @@ object Layout {
       partitions: Int = 8): Unit =
     df.repartitionByRange(partitions, org.apache.spark.sql.functions.col(col))
       .sortWithinPartitions(col)
-      .write.mode("overwrite").parquet(path)
+      .write.mode("overwrite").options(LocalFs.WriteOptions).parquet(path)
 
   /** Read back a partitioned/sorted layout. Filters applied by the
     * caller reach the scan as PartitionFilters / PushedFilters — the
@@ -56,7 +58,7 @@ object Layout {
     * the round trip is lossless at microsecond precision.
     */
   def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite")
+    df.write.mode("overwrite").options(LocalFs.WriteOptions)
       .option("header", "true")
       .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
       .csv(path)
@@ -69,7 +71,7 @@ object Layout {
       .csv(path)
 
   def writeJsonl(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite")
+    df.write.mode("overwrite").options(LocalFs.WriteOptions)
       .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
       .json(path)
 
@@ -125,7 +127,7 @@ object Layout {
       .repartitionByRange(partitions, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z") // projection preserves the clustered order
-      .write.mode("overwrite").parquet(path)
+      .write.mode("overwrite").options(LocalFs.WriteOptions).parquet(path)
   }
 
   /** ORC round trip — the second columnar interchange format (built into
@@ -137,7 +139,7 @@ object Layout {
     * "any columnar format with stats", not "parquet specifically".
     */
   def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
+    df.write.mode("overwrite").options(LocalFs.WriteOptions).orc(path)
 
   def readOrc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)

@@ -73,7 +73,7 @@ object PercolateStream {
         col("query_id"), col("doc_id"), col("n_terms"))
     // one directory per batch id, overwritten on replay — idempotent
     // under at-least-once delivery with no dedup state
-    alerts.coalesce(1).write.mode("overwrite")
+    alerts.coalesce(1).write.mode("overwrite").options(graft.io.LocalFs.WriteOptions)
       .parquet(s"${a.path}/b$batchId")
   }
 

@@ -128,6 +128,11 @@ object StreamApply {
       * restored after it, even when the write throws. Versions written
       * before this format (INT96, dictionaries) open and merge unchanged:
       * parquet readers decode either encoding under the same schema.
+      *
+      * The write's Hadoop conf binds `file:` to [[graft.io.LocalFs]], so
+      * the part files, their `.crc` sidecars and the committer's
+      * directories get their permissions from java.nio rather than a
+      * forked `chmod` each, whoever built the session.
       */
     def write(df: DataFrame, ver: String, leaf: String = ""): Unit = {
       val path = leafPath(ver, leaf)
@@ -135,7 +140,8 @@ object StreamApply {
       val tsKey = "spark.sql.parquet.outputTimestampType"
       val prev = conf.getAll.get(tsKey) // None when unset: restore unset
       conf.set(tsKey, "TIMESTAMP_MICROS")
-      try df.write.mode("overwrite").option("parquet.enable.dictionary", "false").parquet(path)
+      try df.write.mode("overwrite").options(graft.io.LocalFs.WriteOptions)
+        .option("parquet.enable.dictionary", "false").parquet(path)
       finally prev.fold(conf.unset(tsKey))(conf.set(tsKey, _))
       Files.writeString(Paths.get(path, SchemaFile), asRead(df.schema).json)
     }
@@ -494,13 +500,24 @@ object StreamApply {
     * Structured Streaming (SIGMOD 2018), stated once. Every input is
     * stateless, for which append and update emit the same rows; update
     * is the upsert's own mode and also admits an aggregated input.
+    *
+    * The checkpoint writes its offset and commit files through Hadoop's
+    * `FileContext`, which the query's session conf binds to
+    * [[graft.io.LocalFs]] for `file:`: each rename then stats its paths
+    * without forking `readlink`. The binding is a constant set on the
+    * caller's session, never restored, so concurrent sinks cannot undo
+    * each other's; the query keeps it through the session clone that
+    * `start()` makes.
     */
   def batchSink(events: DataFrame, checkpoint: String)(
-      apply: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+      apply: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
+    val afs = graft.io.LocalFs.AbstractFileSystemKey
+    events.sparkSession.conf.set(afs, graft.io.LocalFs.Bindings(afs))
     events.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
       .foreachBatch(apply)
+  }
 
   /** foreachBatch upsert writer over a normalized CDC event stream. */
   def upsertWriter(events: DataFrame, store: ParquetUpsertStore,

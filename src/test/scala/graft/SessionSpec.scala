@@ -35,6 +35,8 @@ class SessionSpec extends SparkSpec {
     assert(conf.get("spark.ui.enabled") == "false")
     assert(Session.CodegenCacheEntries == 4096)
     assert(conf.get("spark.sql.codegen.cache.maxEntries") == "4096")
+    assert(conf.get("spark.hadoop.fs.file.impl") == "graft.io.NioLocalFileSystem")
+    assert(conf.get("spark.hadoop.fs.AbstractFileSystem.file.impl") == "graft.io.NioLocalFs")
     assert(Session.local(cores = 4, shuffle = Some(4)) eq spark,
       "a second call must return the live session")
   }
