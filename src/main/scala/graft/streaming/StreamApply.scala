@@ -67,6 +67,18 @@ object StreamApply {
     try start finally spark.conf.set(key, prev)
   }
 
+  /** Run `body` with the RocksDB state-store provider, which
+    * `transformWithState` requires, restoring the session's provider
+    * setting (or its absence) afterwards.
+    */
+  private[graft] def withRocksDbState[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** The manifest-pointer commit machinery shared by the versioned
     * stores: append-only version directories plus one `CURRENT` file
     * replaced by an atomic rename. See [[ParquetUpsertStore]] for the
@@ -381,14 +393,8 @@ object StreamApply {
       * operation (single-writer contract applies): run it from the
       * maintenance path, never concurrently with merge.
       */
-    def compact(numFiles: Int = 1): Unit = {
-      manifest.currentVersion().foreach { v =>
-        val ver = manifest.nextCompactName()
-        manifest.write(manifest.open(spark, v).coalesce(numFiles), ver)
-        manifest.commitPointer(ver)
-        manifest.clean()
-      }
-    }
+    def compact(numFiles: Int = 1): Unit =
+      manifest.currentVersion().foreach(rewrite(spark, manifest, _, Seq(""), numFiles))
   }
 
   /** Every manifest-pointer store under `root` — any directory holding
@@ -435,6 +441,20 @@ object StreamApply {
         v -> leaves.map(l => l -> parquetParts(man.leafPath(v, l)))
       }
 
+  /** The one compaction rewrite: tables `leaves` of version `v`, each
+    * coalesced to `numFiles` files, written into one new version that a
+    * single pointer swing publishes, so the tables cannot diverge.
+    * Returns the new version's name.
+    */
+  private def rewrite(spark: SparkSession, man: ManifestDir, v: String,
+      leaves: Seq[String], numFiles: Int): String = {
+    val ver = man.nextCompactName()
+    leaves.foreach(l => man.write(man.open(spark, v, l).coalesce(numFiles), ver, l))
+    man.commitPointer(ver)
+    man.clean()
+    ver
+  }
+
   /** Read-only fleet CENSUS: per discovered store, the live version's
     * part-file count (None = a `CURRENT` pointer exists but references
     * no readable version yet). This is what lets a maintenance marker
@@ -480,14 +500,9 @@ object StreamApply {
         val before = tables.map(_._2).sum
         if (before <= numFiles.toLong * tables.size) None
         else {
-          val ver = man.nextCompactName()
-          tables.foreach { case (l, _) =>
-            man.write(man.open(spark, v, l).coalesce(numFiles), ver, l)
-          }
-          man.commitPointer(ver)
-          man.clean()
-          val after = tables.map { case (l, _) => parquetParts(man.leafPath(ver, l)) }.sum
-          Some((sd.toString, before, after))
+          val leaves = tables.map(_._1)
+          val ver = rewrite(spark, man, v, leaves, numFiles)
+          Some((sd.toString, before, leaves.map(l => parquetParts(man.leafPath(ver, l))).sum))
         }
       }
     }

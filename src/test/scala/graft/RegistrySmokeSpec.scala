@@ -68,17 +68,25 @@ class RegistrySmokeSpec extends AnyFunSuite {
     assert(extra.isEmpty, s"oracle without query: $extra")
   }
 
-  test("PLANS exponent parser finds the known sweep measurements") {
-    val plans = new String(Files.readAllBytes(
-      Paths.get(sys.props.getOrElse("user.dir", "."), "PLANS.md")),
-      StandardCharsets.UTF_8)
-    val exps = RegistryManifest.parseExponents(plans)
-    // anchors from three different table formats/rounds
-    assert(exps.get("w3_percent_rank").nonEmpty, "r12 join-tier table unparsed")
-    assert(exps.get("s16_filtered_recall").contains(0.08), "r12 new-op table unparsed")
-    assert(exps.get("x17_bm25").nonEmpty, "r10 retrieval table unparsed")
-    // superseded pre-fix rows must not leak through
-    assert(!exps.get("v2_referential_integrity").contains(1.09),
-      "pre-fix v2 measurement leaked into the manifest")
+  test("a rendered manifest with a quote and a backslash parses back") {
+    val sf = "/data/sf\"0.01\\run"
+    val entries = Seq(
+      RegistryManifest.Entry("a1_\"x\\", "ext.T\"", oracle = true,
+        Seq("idx\\\"1"), Seq("src/test/\"A\".scala")),
+      RegistryManifest.Entry("b2", "cdc.C", oracle = false, Nil, Nil))
+    val text = RegistryManifest.render(sf, entries)
+    val back = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
+    assert(back.get("sf").asText == sf && back.get("n_keys").asInt == 2)
+    val es = back.get("entries")
+    assert(es.size == 2)
+    entries.zipWithIndex.foreach { case (e, i) =>
+      val j = es.get(i)
+      def strs(f: String) = (0 until j.get(f).size).map(j.get(f).get(_).asText)
+      assert(j.get("key").asText == e.key && j.get("module").asText == e.module)
+      assert(j.get("oracle").asBoolean == e.oracle)
+      assert(strs("indexes") == e.indexes && strs("module_specs") == e.moduleSpecs)
+    }
+    // one entry per line, as the committed file reads
+    assert(text.linesIterator.count(_.startsWith("  {\"key\"")) == 2)
   }
 }

@@ -9,6 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
+
+  /** `body` on the RocksDB state-store provider, which
+    * `transformWithState` requires.
+    */
+  def withRocksDb[T](body: => T): T = streaming.StreamApply.withRocksDbState(spark)(body)
 }
 
 object SparkSpec {

@@ -14,11 +14,7 @@ class DistinctStreamSpec extends SparkSpec {
   private def run(batches: Seq[Seq[Hashed]]): Map[String, Seq[Long]] = {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val in = MemoryStream[Hashed]
       val name = s"distinct_out_${System.nanoTime()}"
       val q = registersView(in.toDS()).writeStream
@@ -31,9 +27,6 @@ class DistinctStreamSpec extends SparkSpec {
       rows.zipWithIndex.groupBy(_._1.getString(0)).map { case (g, rs) =>
         g -> rs.maxBy(_._2)._1.getSeq[Long](1)
       }
-    } finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None    => spark.conf.unset(provKey)
     }
   }
 

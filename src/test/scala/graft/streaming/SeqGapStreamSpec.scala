@@ -13,11 +13,7 @@ class SeqGapStreamSpec extends SparkSpec {
   private def run(batches: Seq[Seq[Long]]): Map[Long, (Long, Long, Long, Long)] = {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val in = MemoryStream[Offset]
       val name = s"gap_out_${System.nanoTime()}"
       val q = gapView(in.toDS()).writeStream
@@ -35,9 +31,6 @@ class SeqGapStreamSpec extends SparkSpec {
         val last = rs.maxBy(_._2)._1
         b -> ((last.getLong(1), last.getLong(2), last.getLong(3), last.getLong(4)))
       }
-    } finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None    => spark.conf.unset(provKey)
     }
   }
 

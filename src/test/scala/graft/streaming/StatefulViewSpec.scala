@@ -43,12 +43,6 @@ class StatefulViewSpec extends SparkSpec {
   test("transformWithState view matches the mapGroupsWithState fold") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    // transformWithState requires the RocksDB provider (also the one a
-    // large deployment runs — disk-backed state, changelog checkpoints)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // A ProcessingTime-mode query (required for store TTL) never
     // quiesces, so processAllAvailable cannot be relied on — poll the
     // output table against a deadline instead (same caveat as the
@@ -64,33 +58,31 @@ class StatefulViewSpec extends SparkSpec {
         Thread.sleep(100)
       }
     }
-    val in = MemoryStream[KeyedEvent]
-    val q = StreamApply.statefulViewTws(in.toDS()).writeStream
-      .outputMode("update").format("memory").queryName("tws_out").start()
-    try {
-      in.addData(Seq(
-        KeyedEvent(1, 1, "c", 1.0), KeyedEvent(2, 2, "c", 2.0)))
-      awaitRow((1, 1L, 1.0, false), "initial key-1 state")
-      in.addData(Seq(
-        KeyedEvent(3, 1, "u", 1.5), KeyedEvent(4, 2, "d", 0.0)))
-      awaitRow((1, 3L, 1.5, false), "key-1 update")
-      awaitRow((2, 4L, 0.0, true), "key-2 tombstone")
-      in.addData(Seq(KeyedEvent(1, 1, "c", 1.0))) // stale replay
-      // the replay batch re-emits the UNCHANGED seq-3 state (update-mode
-      // memory sink appends per batch, so a second identical row proves
-      // the replay was processed and rejected)
-      val deadline = System.currentTimeMillis() + 60000
-      while (rows().count(_ == ((1, 3L, 1.5, false))) < 2) {
-        assert(System.currentTimeMillis() < deadline,
-          s"replay batch never processed; table=${rows().toSeq}")
-        Thread.sleep(100)
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None    => spark.conf.unset(provKey)
-      }
+    // transformWithState requires the RocksDB provider (also the one a
+    // large deployment runs — disk-backed state, changelog checkpoints)
+    withRocksDb {
+      val in = MemoryStream[KeyedEvent]
+      val q = StreamApply.statefulViewTws(in.toDS()).writeStream
+        .outputMode("update").format("memory").queryName("tws_out").start()
+      try {
+        in.addData(Seq(
+          KeyedEvent(1, 1, "c", 1.0), KeyedEvent(2, 2, "c", 2.0)))
+        awaitRow((1, 1L, 1.0, false), "initial key-1 state")
+        in.addData(Seq(
+          KeyedEvent(3, 1, "u", 1.5), KeyedEvent(4, 2, "d", 0.0)))
+        awaitRow((1, 3L, 1.5, false), "key-1 update")
+        awaitRow((2, 4L, 0.0, true), "key-2 tombstone")
+        in.addData(Seq(KeyedEvent(1, 1, "c", 1.0))) // stale replay
+        // the replay batch re-emits the UNCHANGED seq-3 state (update-mode
+        // memory sink appends per batch, so a second identical row proves
+        // the replay was processed and rejected)
+        val deadline = System.currentTimeMillis() + 60000
+        while (rows().count(_ == ((1, 3L, 1.5, false))) < 2) {
+          assert(System.currentTimeMillis() < deadline,
+            s"replay batch never processed; table=${rows().toSeq}")
+          Thread.sleep(100)
+        }
+      } finally q.stop()
     }
     // final state per key: replay must NOT have regressed key 1
     val last = rows().groupBy(_._1).map { case (k, rs) => k -> rs.maxBy(_._2) }

@@ -14,11 +14,7 @@ class TopKStreamSpec extends SparkSpec {
   private def run(batches: Seq[Seq[Scored]], k: Int): Map[Int, Seq[(Long, Double)]] = {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val in = MemoryStream[Scored]
       val name = s"topk_out_${System.nanoTime()}"
       val q = topkView(in.toDS(), k).writeStream
@@ -35,9 +31,6 @@ class TopKStreamSpec extends SparkSpec {
         g -> last.getSeq[org.apache.spark.sql.Row](1)
           .map(r => (r.getLong(0), r.getDouble(1)))
       }
-    } finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None    => spark.conf.unset(provKey)
     }
   }
 
