@@ -148,18 +148,16 @@ object Bench {
     // throughput — the min is the steady-state number.
     def timedPass(): Map[String, (Boolean, Double)] = {
       if (skipBatch) return Map.empty
-      // each pass pays SESSION-scoped memoized frames (posting frames,
-      // text stats) exactly once, attributed to their first consumer —
-      // without this, pass 2 reads pass 1's cache and min-of-passes
-      // drops those build costs from the total entirely. The DURABLE
-      // corpus indexes (graft.sources.CorpusIndex: the dedup chain's
-      // token/shingle/sketch/pair/label tables) are a different
-      // category and survive on purpose: they are computed once per
-      // corpus snapshot — like the corpus parquet itself — so the
-      // steady-state number for their consumers is the indexed read,
-      // and the one-time build cost lands visibly in pass 1 of the
-      // first bench run against a fresh corpus.
-      ext.Dedup.clearMemos(spark)
+      // each pass pays the SESSION-scoped FrameMemo entries exactly
+      // once, attributed to their first consumer — without this, pass 2
+      // reads pass 1's cache and min-of-passes drops those build costs
+      // from the total entirely. The DURABLE corpus indexes
+      // (graft.sources.CorpusIndex) are not memo entries and survive on
+      // purpose: they are computed once per corpus snapshot — like the
+      // corpus parquet itself — so the steady-state number for their
+      // consumers is the indexed read, and the one-time build cost lands
+      // visibly in pass 1 of the first bench run against a fresh corpus.
+      ext.FrameMemo.clear(spark)
       benched.map { case (name, fn) =>
         // GC between queries lets the ContextCleaner reap the previous
         // query's shuffle files and broadcasts — without it, timings bleed
@@ -186,39 +184,43 @@ object Bench {
     // SPARK_GRAFT_STREAMING=0 skips the dials: they are SF-independent
     // (synthetic MemoryStream feeds), so scale-sweep artifacts (BENCH_sf1)
     // exclude them rather than re-measure the same numbers at 4 reps each.
-    // Every dial's stores live under one root, this run's own.
-    lazy val storesRoot = java.nio.file.Files.createTempDirectory("graft-bench-stores")
-    val dials: Seq[(String, Double, JsonObj)] =
-      if (sys.env.get("SPARK_GRAFT_STREAMING").contains("0")) Seq.empty
-      else streamingMetrics(spark, storesRoot, warmFirst = skipBatch)
-    // Post-dials fleet maintenance (untimed): the dials just accreted
-    // their manifest-pointer stores under the run's root — compact
-    // them through the unified MaintenanceJob path, so the job is
-    // exercised against a real freshly-written fleet every run, and
-    // record what it did. View identity across the rewrite is the
-    // MaintenanceJobSpec's contract; here we only report.
-    val maintenance =
-      if (dials.isEmpty) None
-      else Some(try {
-        val root = storesRoot.toString
-        // census BEFORE the rewrite pass: stores_committed + files_live
-        // make the 0-compactions shape self-describing ("n stores, all
-        // already at target" vs "saw nothing") — files_before/after
-        // still cover only the stores actually rewritten
-        val census = streaming.StreamApply.storeCensus(root)
-        val compacted = streaming.StreamApply.compactStores(spark, root)
-        obj("stores_seen" -> census.size,
-          "stores_committed" -> census.count(_._2.nonEmpty),
-          "files_live" -> census.flatMap(_._2).sum,
-          "stores_compacted" -> compacted.size,
-          "files_before" -> compacted.map(_._2).sum,
-          "files_after" -> compacted.map(_._3).sum)
-      } catch { case scala.util.control.NonFatal(e) =>
-        // an explicit error field, never the 0/0 shape (r12 ADVICE): a
-        // crashed or half-done compaction must not read as "the walk
-        // found nothing / nothing needed doing"
-        obj("error" -> s"${e.getClass.getName}: ${e.getMessage}".take(200))
-      })
+    // Every dial's stores live under one root, this run's own, deleted
+    // once the maintenance pass has reported on it.
+    val storesRoot = java.nio.file.Files.createTempDirectory("graft-bench-stores")
+    val (dials, maintenance) = try {
+      val dials: Seq[(String, Double, JsonObj)] =
+        if (sys.env.get("SPARK_GRAFT_STREAMING").contains("0")) Seq.empty
+        else streamingMetrics(spark, storesRoot, warmFirst = skipBatch)
+      // Post-dials fleet maintenance (untimed): the dials just accreted
+      // their manifest-pointer stores under the run's root — compact
+      // them through the unified MaintenanceJob path, so the job is
+      // exercised against a real freshly-written fleet every run, and
+      // record what it did. View identity across the rewrite is the
+      // MaintenanceJobSpec's contract; here we only report.
+      val maintenance =
+        if (dials.isEmpty) None
+        else Some(try {
+          val root = storesRoot.toString
+          // census BEFORE the rewrite pass: stores_committed + files_live
+          // make the 0-compactions shape self-describing ("n stores, all
+          // already at target" vs "saw nothing") — files_before/after
+          // still cover only the stores actually rewritten
+          val census = streaming.StreamApply.storeCensus(root)
+          val compacted = streaming.StreamApply.compactStores(spark, root)
+          obj("stores_seen" -> census.size,
+            "stores_committed" -> census.count(_._2.nonEmpty),
+            "files_live" -> census.flatMap(_._2).sum,
+            "stores_compacted" -> compacted.size,
+            "files_before" -> compacted.map(_._2).sum,
+            "files_after" -> compacted.map(_._3).sum)
+        } catch { case scala.util.control.NonFatal(e) =>
+          // an explicit error field, never the 0/0 shape (r12 ADVICE): a
+          // crashed or half-done compaction must not read as "the walk
+          // found nothing / nothing needed doing"
+          obj("error" -> s"${e.getClass.getName}: ${e.getMessage}".take(200))
+        })
+      (dials, maintenance)
+    } finally sources.CorpusIndex.deleteRecursively(storesRoot)
     val probePost = hostLoad()
     val (fullJson, compact) = reports(sfDir, results, skipBatch, dials, maintenance,
       obj(probeFields(probePre, probePost): _*))

@@ -1,45 +1,37 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** The unified nightly MAINTENANCE job for the whole persistence fleet —
-  * one idempotent entry point where there used to be per-store ad-hoc
-  * calls:
+/** The nightly MAINTENANCE job for the whole persistence fleet, in four
+  * steps:
   *
   *   1. COMPACT every manifest-pointer store under the given root
-  *      ([[streaming.StreamApply.compactStores]] — discovers stores by
-  *      their `CURRENT` pointer, so a stream added next round is
-  *      maintained without touching this job), rewriting each live
-  *      version to one file per table through the store's own atomic
-  *      commit. Readers are never disturbed: they observe the old
-  *      layout or the new one.
-  *   2. REFRESH the derived corpus indexes for each live corpus
-  *      directory ([[sources.CorpusIndex.buildAll]] — fingerprint-keyed,
-  *      so an unchanged corpus is a no-op) and VACUUM indexes orphaned
-  *      by regenerated snapshots.
+  *      ([[streaming.StreamApply.compactStores]] — stores are found by
+  *      their `CURRENT` pointer), rewriting each live version to one file
+  *      per table through the store's own atomic commit, so readers see
+  *      the old layout or the new one.
+  *   2. GATE each corpus directory on the v1 expectation suite, printing
+  *      every constraint's metric. A failed EXACT invariant (threshold
+  *      10⁶ ppm: completeness, key uniqueness, declared domains,
+  *      cross-field consistency) skips that corpus's builds and makes
+  *      the job exit 1: no consumer should see indexes derived from a
+  *      snapshot that failed its own contract. Rate-based constraints are
+  *      advisory, since some fail by design (the user_id non-key
+  *      control). `--no-gate` builds anyway, for forensic runs against a
+  *      known-bad snapshot.
+  *   3. BUILD the corpus indexes of each corpus that passed
+  *      ([[sources.CorpusIndex.buildAll]] — fingerprint-keyed, so an
+  *      unchanged corpus is a no-op).
+  *   4. VACUUM, once over all given directories, the indexes that match
+  *      none of them. Pass EVERY live corpus in ONE run (or
+  *      `--no-vacuum`): back-to-back per-corpus runs would each vacuum
+  *      the other corpus's live indexes and force full rebuilds.
   *
-  * Both halves are idempotent by construction: a second run against an
-  * unchanged fleet compacts nothing and rebuilds nothing —
-  * `MaintenanceJobSpec` asserts that, plus data identity across the
-  * rewrite. The bench's steady-state streaming path runs step 1 over
-  * its dial stores after the dials complete (reported in the
-  * `maintenance` marker), so every round exercises the job against a
-  * freshly-accreted fleet.
+  * A second run against an unchanged fleet compacts and builds nothing
+  * (`MaintenanceJobSpec`, `CorpusIndexSpec`). Bench runs step 1 over its
+  * dial stores after the dials (its `maintenance` marker).
   *
-  * Usage: runMain graft.MaintenanceJob <storesRoot> [sfDir1,sfDir2,...] [--no-vacuum]
+  * Usage: runMain graft.MaintenanceJob <storesRoot> [sfDir1,sfDir2,...] [--no-vacuum] [--no-gate]
   */
 object MaintenanceJob {
-
-  /** Run both halves; returns (compactions, index builds, vacuumed). */
-  def run(spark: SparkSession, storesRoot: String, sfDirs: Seq[String],
-      vacuum: Boolean = true): (Seq[(String, Long, Long)], Seq[(String, Long)], Seq[String]) = {
-    val compacted = streaming.StreamApply.compactStores(spark, storesRoot)
-    val built = sfDirs.flatMap(d => sources.CorpusIndex.buildAll(spark, d))
-    val gone =
-      if (vacuum && sfDirs.nonEmpty) sources.CorpusIndex.vacuum(spark, sfDirs)
-      else Seq.empty
-    (compacted, built, gone)
-  }
 
   def main(args: Array[String]): Unit = {
     // positional args are the non-flag ones: `MaintenanceJob --no-vacuum`
@@ -51,14 +43,42 @@ object MaintenanceJob {
     val sfDirs = positional.drop(1).headOption
       .map(_.split(",").toSeq).getOrElse(Seq.empty)
     val doVacuum = !args.contains("--no-vacuum")
+    val gate = !args.contains("--no-gate")
+    // SPARK_GRAFT_SHUFFLE (see Session): the sf10 synth builds want 128
+    // partitions so the band-join explosion spreads (PLANS.md round 13)
     val spark = Session.local()
-    val (compacted, built, gone) = run(spark, storesRoot, sfDirs, doVacuum)
+    val compacted = streaming.StreamApply.compactStores(spark, storesRoot)
     compacted.foreach { case (d, b, a) =>
       println(s"MAINTENANCE compacted $d files $b -> $a")
     }
-    built.foreach { case (n, c) => println(s"MAINTENANCE index $n rows=$c") }
+    var gateFailed = false
+    var built = 0
+    for (d <- sfDirs) {
+      val report = ext.Validate.expectationSuite(spark, d).collect()
+      report.foreach(r => println(s"MAINTENANCE quality dir=$d " +
+        s"${r.getString(0)} metric_ppm=${r.getLong(1)} " +
+        s"threshold_ppm=${r.getLong(2)} passed=${r.getBoolean(3)}"))
+      val hard = report.filter(r => r.getLong(2) == 1000000L && !r.getBoolean(3))
+      if (hard.nonEmpty && gate) {
+        gateFailed = true
+        println(s"MAINTENANCE dir=$d SKIPPED: hard constraint(s) failed: " +
+          hard.map(_.getString(0)).mkString(", "))
+      } else {
+        val t0 = System.nanoTime()
+        val indexes = sources.CorpusIndex.buildAll(spark, d)
+        val dt = (System.nanoTime() - t0) / 1e9
+        built += indexes.size
+        println(f"MAINTENANCE dir=$d t=$dt%.1fs " +
+          indexes.map { case (n, c) => s"$n=$c" }.mkString(" "))
+      }
+    }
+    val gone =
+      if (doVacuum && sfDirs.nonEmpty) sources.CorpusIndex.vacuum(spark, sfDirs)
+      else Seq.empty
     println(s"MAINTENANCE stores_compacted=${compacted.size} " +
-      s"indexes=${built.size} vacuumed=${gone.size}")
+      s"indexes=$built vacuumed=${gone.size}" +
+      (if (gone.isEmpty) "" else gone.mkString(" [", ", ", "]")))
     spark.stop()
+    if (gateFailed) sys.exit(1)
   }
 }

@@ -9,6 +9,8 @@ import org.apache.spark.scheduler._
   * cannot distinguish. Methodology mirrors Bench (warmup at the smallest
   * SF, System.gc() between queries, min of two timed passes is NOT used —
   * this is a diagnostic, each query runs twice and both are printed).
+  * Pass 2 also prints each query's stages with their task counts and
+  * task time.
   *
   * Usage: runMain graft.Prof <sfDir> q1,q2,...
   */
@@ -24,25 +26,19 @@ object Prof {
     val taskTimeMs = new java.util.concurrent.atomic.AtomicLong(0)
     // per-stage detail for the current query (name → tasks, taskTime)
     val stageDetail = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-    val detail = sys.env.get("SPARK_GRAFT_PROF_STAGES").contains("1")
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         stages.incrementAndGet()
+        val si = sc.stageInfo
+        stageDetail.merge(f"${si.stageId}%05d ${si.name.take(90)}",
+          (si.numTasks.toLong, si.taskMetrics.executorRunTime),
+          (a, b) => (a._1 + b._1, a._2 + b._2))
+      }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
         tasks.incrementAndGet()
         if (t.taskInfo != null) taskTimeMs.addAndGet(t.taskInfo.duration)
-      }
-    })
-    // separate listener capturing stage-level aggregates with names
-    if (detail) spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val name = si.name.take(90)
-        val tt = si.taskMetrics.executorRunTime
-        stageDetail.merge(f"${si.stageId}%05d $name",
-          (si.numTasks.toLong, tt), (a, b) => (a._1 + b._1, a._2 + b._2))
       }
     })
 
@@ -59,7 +55,7 @@ object Prof {
     }
     println(f"${"query"}%-28s pass  wall_s  jobs stages  tasks  tasktime_s")
     for (pass <- 1 to 2) {
-      ext.Dedup.clearMemos(spark)
+      ext.FrameMemo.clear(spark)
       names.foreach { n =>
         System.gc()
         val (j0, s0, t0, tt0) = (jobs.get, stages.get, tasks.get, taskTimeMs.get)
@@ -70,7 +66,7 @@ object Prof {
         // listener bus is async; give it a beat to drain
         Thread.sleep(150)
         println(f"$n%-28s $pass%4d  ${wall}%6.3f  ${jobs.get - j0}%4d ${stages.get - s0}%6d ${tasks.get - t0}%6d  ${(taskTimeMs.get - tt0) / 1e3}%9.3f")
-        if (detail && pass == 2) {
+        if (pass == 2) {
           stageDetail.entrySet().stream()
             .sorted(java.util.Map.Entry.comparingByKey())
             .forEach { e =>

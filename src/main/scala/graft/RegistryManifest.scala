@@ -68,7 +68,7 @@ object RegistryManifest {
         // construction-time dependency recording; memos cleared per key
         // so a shared chain's indexes attribute to EVERY rider, not
         // just the first key that happened to build the memo
-        ext.Dedup.clearMemos(spark)
+        ext.FrameMemo.clear(spark)
         val deps =
           try sources.CorpusIndex.recordingDeps(qs(key)(spark, sfDir))._2
           catch { case scala.util.control.NonFatal(_) => Set("<construction-error>") }

@@ -37,12 +37,6 @@ object Dedup {
   private def docs(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
 
-  /** Distinct-token-set Jaccard between two array columns. */
-  private def jaccard(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b)).cast("long")
-    inter.cast("double") / (size(a) + size(b) - inter).cast("double")
-  }
-
   /** Jaccard-thresholded pair output, evaluated ONCE per pair: the
     * intersection size and total size materialize in one projection
     * (subexpression-eliminated), the threshold runs behind an optimizer
@@ -107,14 +101,12 @@ object Dedup {
       s"i -> ((hs[i] * 31 + hs[i+1]) * 31 + hs[i+2]) % $P))"
 
   /** Distinct 3-gram shingle hashes per document — `(doc_id, source,
-    * shingle)`, materialized once PER SESSION+DIRECTORY and memoized:
-    * [[ngramJaccard]] (near-dup blocking), [[Prep.contamination]] and its
-    * removal filter all consume the same frame, so a driver that runs
-    * several of them (Verify, Bench) pays the shingle pipeline (md5 +
-    * two window shuffles + distinct) exactly once. The memo holds a
-    * localCheckpointed frame — a few longs per shingle — for the session
-    * lifetime; at 100 TB the same role is played by writing the shingle
-    * table once and scanning it per consumer.
+    * shingle)`, persisted as the `shingle_postings` corpus index
+    * ([[graft.sources.CorpusIndex]]): [[ngramJaccard]] (near-dup
+    * blocking), [[Prep.contamination]] and its removal filter all read
+    * the same table, so the shingle pipeline (md5 + two window shuffles
+    * + distinct) runs once per corpus snapshot — the shingle table a
+    * 100 TB pipeline writes once and scans per consumer.
     *
     * Fully-relational shingle construction — no array columns at all.
     * (An earlier array formulation bound the token-hash array and read
@@ -125,31 +117,9 @@ object Dedup {
     * distinct — each step a plain relational op Catalyst can't
     * pessimize.
     */
-  /** Memoize a small derived frame per (name, session, directory) —
-    * see [[FrameMemo]] (shared with the text/search posting frames).
-    */
-  private def memoFrame(name: String, spark: SparkSession, sfDir: String)(
-      build: => DataFrame): DataFrame =
-    FrameMemo(name, spark, sfDir)(build)
-
-  /** Drop ALL memoized frames (every [[FrameMemo]] user, not just this
-    * file's). The bench calls this before each timed pass so every pass
-    * pays each SESSION-scoped shared intermediate exactly once —
-    * otherwise min-of-passes would silently exclude those build costs
-    * (pass 2 reads pass 1's cache) and the total would understate a
-    * cold driver run. The DURABLE corpus indexes
-    * ([[graft.sources.CorpusIndex]]: token/shingle/sketch/pair/label
-    * tables) are deliberately NOT dropped: they are computed once per
-    * corpus snapshot like the corpus parquet itself, and a cold driver
-    * run reads them from disk — that read IS the steady-state cost.
-    */
-  private[graft] def clearMemos(owner: SparkSession): Unit =
-    FrameMemo.clear(owner)
-
   private[graft] def shingleFrame(spark: SparkSession, sfDir: String): DataFrame =
-    memoFrame("shingles", spark, sfDir)(
-      graft.sources.CorpusIndex.ensureBucketed(spark, "shingle_postings",
-        sfDir, Seq("documents"), "doc_id")(buildShingleFrame(spark, sfDir)))
+    graft.sources.CorpusIndex.ensureBucketed(spark, "shingle_postings",
+      sfDir, Seq("documents"), "doc_id")(buildShingleFrame(spark, sfDir))
 
   /** Positional token hashes `(doc_id, source, pos, h)` — one md5 per
     * token in the corpus, persisted as a bucketed corpus index
@@ -161,14 +131,13 @@ object Dedup {
     * durable across drivers, invalidated by the corpus fingerprint.
     */
   private[graft] def tokenHashFrame(spark: SparkSession, sfDir: String): DataFrame =
-    memoFrame("tokHashes", spark, sfDir)(
-      graft.sources.CorpusIndex.ensureBucketed(spark, "token_hashes",
-        sfDir, Seq("documents"), "doc_id")(
-        docs(spark, sfDir)
-          .select(col("doc_id"), col("source"),
-            posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
-          .select(col("doc_id"), col("source"), col("pos"),
-            tokenHash(col("tok")).as("h"))))
+    graft.sources.CorpusIndex.ensureBucketed(spark, "token_hashes",
+      sfDir, Seq("documents"), "doc_id")(
+      docs(spark, sfDir)
+        .select(col("doc_id"), col("source"),
+          posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
+        .select(col("doc_id"), col("source"), col("pos"),
+          tokenHash(col("tok")).as("h")))
 
   private def buildShingleFrame(spark: SparkSession, sfDir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -210,10 +179,9 @@ object Dedup {
     * the postings that build it.
     */
   private[graft] def coOccurFrame(spark: SparkSession, sfDir: String): DataFrame =
-    memoFrame("coOccur", spark, sfDir)(
-      graft.sources.CorpusIndex.ensureBucketed(spark, "shingle_cooccur",
-        sfDir, Seq("documents"), "doc_a")(
-        coOccurrence(shingleFrame(spark, sfDir), HotShingleCap)))
+    graft.sources.CorpusIndex.ensureBucketed(spark, "shingle_cooccur",
+      sfDir, Seq("documents"), "doc_a")(
+      coOccurrence(shingleFrame(spark, sfDir), HotShingleCap))
 
   /** Posting-list co-occurrence `(doc_a < doc_b, na, nb, inter)` over a
     * `(doc_id, source, shingle)` frame — the shared engine of d2 (exact
@@ -427,13 +395,11 @@ object Dedup {
     // persisted corpus index: d3's output is also d7's edge set, and the
     // confirmed pair frame is tiny (near-dup hits), so ONE build per
     // corpus snapshot serves every consumer in every later driver
-    memoFrame("lshPairs", spark, sfDir)(
-      graft.sources.CorpusIndex.ensureBucketed(spark, s"lsh_pairs$geomTag$capTag",
-        sfDir, Seq("documents"), "doc_a")(buildMinhashLsh(spark, sfDir)))
+    graft.sources.CorpusIndex.ensureBucketed(spark, s"lsh_pairs$geomTag$capTag",
+      sfDir, Seq("documents"), "doc_a")(buildMinhashLsh(spark, sfDir))
 
   /** Per-document MinHash sketch `(doc_id, bk0..bk{LshBands-1}, toks)`,
-    * memoized:
-    * the full self-dedup (d3) and the delta-vs-corpus incremental dedup
+    * a persisted corpus index: the full self-dedup (d3) and the delta-vs-corpus incremental dedup
     * (d13) read the same frame. At 100 TB this is the persisted sketch
     * INDEX a production pipeline maintains next to the corpus — built
     * once, consulted by every ingest batch.
@@ -458,9 +424,8 @@ object Dedup {
     * persist(MEMORY_AND_DISK) + a reliable checkpoint on a cluster.
     */
   private[graft] def sketchFrame(spark: SparkSession, sfDir: String): DataFrame =
-    memoFrame("minhashSketch", spark, sfDir)(
-      graft.sources.CorpusIndex.ensureBucketed(spark, s"minhash_sketch$geomTag",
-        sfDir, Seq("documents"), "doc_id")(sketchOf(docs(spark, sfDir))))
+    graft.sources.CorpusIndex.ensureBucketed(spark, s"minhash_sketch$geomTag",
+      sfDir, Seq("documents"), "doc_id")(sketchOf(docs(spark, sfDir)))
 
   /** The sketch pass over an arbitrary `(doc_id, text)` frame — the
     * per-document unit of the persisted index: [[LshPerms]] signature minima AND
@@ -841,11 +806,10 @@ object Dedup {
     // sweep's dominant cold cost, exp 0.71–0.79 across those consumers).
     // Bucketing by the cluster key makes the canonical consumers'
     // reductions Exchange-free on the scan (`CorpusIndexSpec`).
-    memoFrame("cc:minhash", spark, sfDir)(
-      graft.sources.CorpusIndex.ensureBucketed(spark, s"labels_minhash$geomTag$capTag",
-        sfDir, Seq("documents"), "canonical")(
-        minLabelClusters(minhashLsh(spark, sfDir), "doc_a", "doc_b",
-          docs(spark, sfDir), "doc_id")))
+    graft.sources.CorpusIndex.ensureBucketed(spark, s"labels_minhash$geomTag$capTag",
+      sfDir, Seq("documents"), "canonical")(
+      minLabelClusters(minhashLsh(spark, sfDir), "doc_a", "doc_b",
+        docs(spark, sfDir), "doc_id"))
 
   /** d27 — PRODUCTION PIPELINE ORDER, d1 → d3 composed: exact dedup
     * FIRST, then MinHash-LSH over the exact-family REPRESENTATIVES
@@ -877,11 +841,10 @@ object Dedup {
     * label table back through the family map.
     */
   def exactThenLsh(spark: SparkSession, sfDir: String): DataFrame =
-    memoFrame("cc:exactThenLsh", spark, sfDir)(
-      graft.sources.CorpusIndex.ensureBucketed(spark,
-        s"labels_exact_lsh$geomTag$capTag",
-        sfDir, Seq("documents"), "canonical")(
-        exactThenLshOn(docs(spark, sfDir), sketchFrame(spark, sfDir))))
+    graft.sources.CorpusIndex.ensureBucketed(spark,
+      s"labels_exact_lsh$geomTag$capTag",
+      sfDir, Seq("documents"), "canonical")(
+      exactThenLshOn(docs(spark, sfDir), sketchFrame(spark, sfDir)))
 
   /** d27 over arbitrary `(doc_id, text)` docs and their
     * [[sketchOf]]-shaped sketch — injectable so the spec can prove
@@ -919,7 +882,7 @@ object Dedup {
     * associative struct-min.
     *
     * Scale shape: pairs materialize WITHIN clusters only — a self-join
-    * on the memoized d7 label, so the pair count is Σ|cluster|², bounded
+    * on the indexed d7 label, so the pair count is Σ|cluster|², bounded
     * by near-dup family sizes, not corpus size — AND the pair path is
     * CAPPED at [[MedoidMemberCap]] members: a DEGENERATE giant cluster
     * (say 10⁶ byte-identical crawls) makes the exact medoid quadratic in
@@ -1159,7 +1122,7 @@ object Dedup {
     * gives each near-dup CLUSTER — not each copy — equal expected mass;
     * without it, content duplicated 50× is 50× over-represented in the
     * training mix. Cost on top of d7: one size aggregation over the
-    * memoized label frame and a re-join on the canonical key (both
+    * indexed label frame and a re-join on the canonical key (both
     * label-sized, shuffled on longs). The weights are exact integers, so
     * the oracle (d7's recursive-CTE closure + the same division)
     * hash-matches.
@@ -1176,7 +1139,7 @@ object Dedup {
     * keep the LONGEST member (ties to the lowest doc_id). This is the
     * decision the whole dedup family exists to feed — which physical row
     * survives into the training mix — and the policy is a one-pass
-    * partial-aggregable fold over the memoized label frame: `max(struct(
+    * partial-aggregable fold over the indexed label frame: `max(struct(
     * n_chars, -doc_id))` is associative, so map-side combine reduces
     * each cluster to one candidate per partition and the shuffle moves
     * |clusters| rows, never |docs|. (A window row_number would sort
@@ -1307,11 +1270,10 @@ object Dedup {
     * broadcasts.
     */
   def embedClusters(spark: SparkSession, sfDir: String): DataFrame =
-    memoFrame("cc:embed", spark, sfDir)(
-      graft.sources.CorpusIndex.ensureBucketed(spark, "labels_embed",
-        sfDir, Seq("embeddings"), "canonical")(
-        minLabelClusters(embedNearDup(spark, sfDir), "vec_a", "vec_b",
-          Tables.embeddings(spark, sfDir), "vec_id")))
+    graft.sources.CorpusIndex.ensureBucketed(spark, "labels_embed",
+      sfDir, Seq("embeddings"), "canonical")(
+      minLabelClusters(embedNearDup(spark, sfDir), "vec_a", "vec_b",
+        Tables.embeddings(spark, sfDir), "vec_id"))
 
   // ---- d4: SimHash ------------------------------------------------------
 
@@ -1387,7 +1349,7 @@ object Dedup {
   }
 
   /** d10 — triangle census of the near-dup graph (edges =
-    * [[embedNearDup]]'s cosine pairs, the same memoized frame d9
+    * [[embedNearDup]]'s cosine pairs, the same indexed frame d9
     * clusters): global triangle count, wedge count, and transitivity
     * 3·T/W — the structural audit that tells a dedup pipeline whether
     * its near-dup relation is clique-like (true duplicate clusters —
@@ -1552,7 +1514,7 @@ object Dedup {
     (shells :+ core).reduce(_ unionByName _)
   }
 
-  /** d11 — PageRank over the semantic near-dup graph (same memoized edge
+  /** d11 — PageRank over the semantic near-dup graph (same indexed edge
     * set as d9/d10): the canonical-document selector. When a near-dup
     * cluster collapses to one representative, "highest PageRank in the
     * similarity graph" picks the document most centrally duplicated —
@@ -1725,9 +1687,8 @@ object Dedup {
   def embedNearDup(spark: SparkSession, sfDir: String): DataFrame =
     // persisted corpus index, as with [[minhashLsh]]: d6's output is the
     // edge set of d9's clusters, d10's census, and d11's PageRank
-    memoFrame("embedPairs", spark, sfDir)(
-      graft.sources.CorpusIndex.ensureBucketed(spark, "embed_pairs",
-        sfDir, Seq("embeddings"), "vec_a")(buildEmbedNearDup(spark, sfDir)))
+    graft.sources.CorpusIndex.ensureBucketed(spark, "embed_pairs",
+      sfDir, Seq("embeddings"), "vec_a")(buildEmbedNearDup(spark, sfDir))
 
   private[ext] def buildEmbedNearDup(spark: SparkSession, sfDir: String): DataFrame =
     buildEmbedNearDupOn(Tables.embeddings(spark, sfDir))
@@ -1815,10 +1776,9 @@ object Dedup {
     // persisted corpus index: the maximal duplicated spans are consumed
     // by d12 itself, d15's coverage gate, and c9's span scrub — the
     // posting self-join + islands merge runs once per corpus snapshot
-    memoFrame("dupSpans", spark, sfDir)(
-      graft.sources.CorpusIndex.ensureBucketed(spark, "dup_spans",
-        sfDir, Seq("documents"), "doc_id")(
-        substringSpansOf(tokenHashFrame(spark, sfDir))))
+    graft.sources.CorpusIndex.ensureBucketed(spark, "dup_spans",
+      sfDir, Seq("documents"), "doc_id")(
+      substringSpansOf(tokenHashFrame(spark, sfDir)))
 
   /** d15 — SPAN-COVERAGE dedup gate: the whole-document decision on top
     * of d12's localized spans — what fraction of each document is
@@ -1883,7 +1843,7 @@ object Dedup {
     * in for "today's ingest") deduplicated against the full corpus
     * without recomputing the corpus-side self-join — the shape a 100 TB
     * pipeline actually runs daily. The corpus side is the persisted
-    * [[sketchFrame]] index (built once, here memoized); only the DELTA's
+    * [[sketchFrame]] index (built once per snapshot); only the DELTA's
     * band keys join against it, so per-ingest cost follows |delta| ×
     * collision rate, not |corpus|². Result ≡ d3's pairs restricted to
     * those touching the delta (the oracle states exactly that), so the
@@ -1970,7 +1930,7 @@ object Dedup {
     *
     * Before-labels run the SAME fold-proven CC engine
     * ([[minLabelClusters]]) over the persisted pair index restricted to
-    * old×old edges; after-labels are the memoized d7 table. Output is
+    * old×old edges; after-labels are the indexed d7 table. Output is
     * bounded by delta-touching clusters, not the corpus. At 100 TB the
     * before-labels of the PREVIOUS snapshot would be the persisted label
     * table itself — here they are recomputed from the same pair index
@@ -1979,19 +1939,18 @@ object Dedup {
   /** The PRE-INGEST label table (labels over old docs and old×old
     * edges) — a persisted corpus index like d7's: in production it IS
     * the previous snapshot's label table; here it derives from the same
-    * pair index that snapshot would have had. Built by `IndexJob`
+    * pair index that snapshot would have had. Built by `MaintenanceJob`
     * alongside `labels_minhash`.
     */
   private[graft] def preIngestLabels(spark: SparkSession, sfDir: String): DataFrame =
-    memoFrame("cc:minhashOld", spark, sfDir)(
-      graft.sources.CorpusIndex.ensureBucketed(spark, s"labels_minhash_old$geomTag$capTag",
-        sfDir, Seq("documents"), "canonical")(
-        minLabelClusters(
-          minhashLsh(spark, sfDir)
-            .filter(col("doc_a") % 10 =!= 0 && col("doc_b") % 10 =!= 0),
-          "doc_a", "doc_b",
-          docs(spark, sfDir).select("doc_id").filter(col("doc_id") % 10 =!= 0),
-          "doc_id")))
+    graft.sources.CorpusIndex.ensureBucketed(spark, s"labels_minhash_old$geomTag$capTag",
+      sfDir, Seq("documents"), "canonical")(
+      minLabelClusters(
+        minhashLsh(spark, sfDir)
+          .filter(col("doc_a") % 10 =!= 0 && col("doc_b") % 10 =!= 0),
+        "doc_a", "doc_b",
+        docs(spark, sfDir).select("doc_id").filter(col("doc_id") % 10 =!= 0),
+        "doc_id"))
 
   def ingestChurn(spark: SparkSession, sfDir: String): DataFrame = {
     val isDelta = col("doc_id") % 10 === 0

@@ -108,7 +108,7 @@ object Pipeline {
     * share vs the share after c13's cluster-equalized weights — the
     * number that tells you how deduplication actually rebalanced the
     * training mix (a source whose volume is near-dup families loses
-    * mass; unique-content sources gain). Rides the memoized d7 labels
+    * mass; unique-content sources gain). Rides the indexed d7 labels
     * through `Dedup.clusterWeights`; shares are exact integral ppm over
     * DECIMAL(38,0)/HUGEINT (t19's discipline — eff_units·10⁶ exceeds a
     * long at corpus scale), so the rollup is order-independent and

@@ -214,8 +214,8 @@ object Prep {
     bpeTrainedOnDocs(spark, sfDir)._1
 
   /** The corpus BPE artifacts — (ordered merge table, final symbol
-    * table) — memoized per (session, sfDir) through [[FrameMemo]]
-    * exactly like the shingle/posting frames: c10, c12 and c18 all
+    * table) — memoized per (session, sfDir) through [[FrameMemo]]:
+    * c10, c12 and c18 all
     * consume the SAME 6-round trainer fold, so a driver run that
     * executes several of them pays the loop once (each merge round is a
     * blocking argmax, so three cold trainings were pure repetition). At

@@ -492,7 +492,7 @@ object Sampling {
   def cmHeavyHitters(spark: SparkSession, sfDir: String): DataFrame = {
     def buckets = array((0 until CmRows).map(i =>
       tokenHash(concat(lit(s"cm$i:"), col("term"))) % CmWidth): _*)
-    // both the counters and the truth reaggregate the memoized
+    // both the counters and the truth reaggregate the indexed
     // per-(doc, term) posting frame — zero additional corpus scans; a
     // counter cell is the sum of tf over the terms hashing into it,
     // identical to counting occurrences directly

@@ -63,8 +63,8 @@ object Search {
     */
   def matchSearch(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // the same memoized posting frame x10's TF-IDF reads — built once
-    // per driver run (at 100 TB: the written term-frequency table)
+    // the same posting index x10's TF-IDF reads — built once per corpus
+    // snapshot (at 100 TB: the written term-frequency table)
     matchSearchOn(TextAnalysis.termFreq(spark, sfDir),
       docs(spark, sfDir).agg(count(lit(1)).as("n_docs")),
       matchQueries.toDF("query_id", "term"))
@@ -118,7 +118,7 @@ object Search {
   def phraseSearch(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val q = phraseQueries.toDF("query_id", "phrase")
-    // shared lead-window n-gram base (memoized with x11's bigrams)
+    // shared lead-window n-gram base (indexed with x11's bigrams)
     val base = TextAnalysis.gramBase(spark, sfDir)
     val g2 = base.filter(col("w2").isNotNull)
       .select(col("doc_id"), concat_ws(" ", col("w1"), col("w2")).as("gram"))
@@ -618,7 +618,7 @@ object Search {
     * displayed hint — the OpenSearch `search_as_you_type` /
     * `completion` suggester surface over the corpus vocabulary.
     *
-    * Shape: completions come from the VOCABULARY rollup of the memoized
+    * Shape: completions come from the VOCABULARY rollup of the
     * postings index (one `(term, df, cf)` row per distinct term — the
     * frame an edge-n-gram index is built from), never the corpus. Per
     * distinct typed length the prefix key is a `substring` projection

@@ -169,12 +169,11 @@ object TextAnalysis {
     * cheap reaggregation of the (already small) tf frame.
     */
   private[graft] def termFreq(spark: SparkSession, sfDir: String): DataFrame =
-    FrameMemo("termTf", spark, sfDir)(
-      graft.sources.CorpusIndex.ensureBucketed(spark, "term_freq",
-        sfDir, Seq("documents"), "doc_id")(
-        docs(spark, sfDir)
-          .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-          .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))))
+    graft.sources.CorpusIndex.ensureBucketed(spark, "term_freq",
+      sfDir, Seq("documents"), "doc_id")(
+      docs(spark, sfDir)
+        .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
+        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
 
   /** Unigram/bigram/trigram base (doc_id, w1, w2, w3) — a PERSISTED
     * corpus index shared by x11 bigram stats, x15 LM score, and x13
@@ -194,21 +193,20 @@ object TextAnalysis {
     * [[Dedup.shingleFrame]]).
     */
   private[graft] def gramBase(spark: SparkSession, sfDir: String): DataFrame =
-    FrameMemo("gramBase", spark, sfDir)(
-      graft.sources.CorpusIndex.ensureBucketed(spark, "gram_base",
-        sfDir, Seq("documents"), "doc_id") {
-        val toks = docs(spark, sfDir)
-          .select(col("doc_id"), tokens(col("text")).as("ws"))
-          .localCheckpoint()
-        toks
-          .select(col("doc_id"), explode(expr(
-            """transform(ws, (w, i) -> struct(
-              |  w AS w1,
-              |  try_element_at(ws, i + 2) AS w2,
-              |  try_element_at(ws, i + 3) AS w3))""".stripMargin)).as("g"))
-          .select(col("doc_id"), col("g.w1").as("w1"),
-            col("g.w2").as("w2"), col("g.w3").as("w3"))
-      })
+    graft.sources.CorpusIndex.ensureBucketed(spark, "gram_base",
+      sfDir, Seq("documents"), "doc_id") {
+      val toks = docs(spark, sfDir)
+        .select(col("doc_id"), tokens(col("text")).as("ws"))
+        .localCheckpoint()
+      toks
+        .select(col("doc_id"), explode(expr(
+          """transform(ws, (w, i) -> struct(
+            |  w AS w1,
+            |  try_element_at(ws, i + 2) AS w2,
+            |  try_element_at(ws, i + 3) AS w3))""".stripMargin)).as("g"))
+        .select(col("doc_id"), col("g.w1").as("w1"),
+          col("g.w2").as("w2"), col("g.w3").as("w3"))
+    }
 
   def tfidfTopTerms(spark: SparkSession, sfDir: String): DataFrame = {
     val tf = termFreq(spark, sfDir)
@@ -249,7 +247,7 @@ object TextAnalysis {
     * multiply runs in DECIMAL(38,0) (c12·N·1e6 brushes the long range
     * around sf1; the oracle's HUGEINT matches — DuckDB's decimal `//`
     * routes through a double and drops ulps past 2⁵³, t19's lesson).
-    * One pass over the memoized gram base builds all three count frames
+    * One pass over the indexed gram base builds all three count frames
     * with map-side partials; the min-support gate (c12 ≥ 5) shrinks the
     * pair frame BEFORE the marginal joins, and the grand total rides a
     * one-row broadcast. Top-50 under a total order → TakeOrderedAndProject.
@@ -302,7 +300,7 @@ object TextAnalysis {
     * sum is exact; the single final division is exact-input IEEE and
     * portable. (True perplexity exponentiates a log sum — libm, the
     * cross-engine hash trap; the rational mean ranks documents the same
-    * way for gating purposes.) Reuses the memoized gram base and the
+    * way for gating purposes.) Reuses the indexed gram base and the
     * bigram/unigram counts — corpus scanned zero extra times.
     *
     * Scale shape (the round-8 fix, sweep exp 1.14 → sub-linear): the

@@ -74,7 +74,10 @@ object CorpusIndex {
     * "which durable indexes does this query ride" extraction, robust to
     * `localCheckpoint` truncating the logical plan (a plan walk would
     * lose scans behind a checkpoint; construction-time recording
-    * cannot).
+    * cannot). Only reads made outside an index build count: a build's
+    * own index reads happen only when the index root is cold, so
+    * recording them would make the recorded set depend on the root's
+    * state, not on the query.
     */
   private val depRecorder =
     new ThreadLocal[scala.collection.mutable.Set[String]]
@@ -82,6 +85,13 @@ object CorpusIndex {
     val s = scala.collection.mutable.Set.empty[String]
     depRecorder.set(s)
     try { val r = f; (r, s.toSet) } finally depRecorder.remove()
+  }
+
+  /** `f` with any active recording suspended (see [[recordingDeps]]). */
+  private def unrecorded[T](f: => T): T = {
+    val s = depRecorder.get
+    depRecorder.remove()
+    try f finally if (s != null) depRecorder.set(s)
   }
 
   /** Return `name` for the corpus at `sfDir` as a bucketed catalog
@@ -97,7 +107,7 @@ object CorpusIndex {
     if (spark.catalog.tableExists(table)) return spark.table(table)
     val dir = new File(root(spark), s"${name}_$fp")
     if (!new File(dir, "_SUCCESS").exists())
-      publish(spark, dir, bucketKey, sourceTables, build)
+      unrecorded(publish(spark, dir, bucketKey, sourceTables, build))
     register(spark, table, dir, bucketKey)
     spark.table(table)
   }
@@ -174,9 +184,9 @@ object CorpusIndex {
          |LOCATION '${dir.getPath}'""".stripMargin)
   }
 
-  /** The maintenance entry point — the "nightly index job": force-build
-    * every derived corpus index for `sfDir` (dedup chain + text
-    * postings) so interactive consumers only ever pay reads. Returns
+  /** Force-build every derived corpus index for `sfDir` (dedup chain +
+    * text postings) so interactive consumers only ever pay reads; the
+    * nightly [[graft.MaintenanceJob]] runs it per corpus. Returns
     * (index name, row count) per table; all builds are no-ops when the
     * fingerprint already matches. A production deployment schedules
     * this right after each corpus snapshot lands.

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Continuously-maintained CLASSIFIER CALIBRATION — c24's ROC/AUC audit
   * kept current from a CDC DOCUMENT stream. A curation team watching a
@@ -14,8 +13,8 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * Per micro-batch of document change events
   * `(seq, doc_id, source, text, op)`:
   *
-  *   1. last-write-wins WITHIN the batch per doc_id (the same
-  *      `max(struct(seq, …))` reduction as the upsert store);
+  *   1. last-write-wins WITHIN the batch per doc_id
+  *      ([[StreamApply.latestPerDoc]]);
   *   2. each surviving upsert scores ONCE — c22's engine over the
   *      DELTA's token hashes ([[graft.ext.Prep.classifierScoresOn]] fed
   *      by [[graft.ext.Prep.textTokenHashes]] — the delta isn't in the
@@ -83,23 +82,12 @@ object CalibrationStream {
     * through the merge. Public so tests can drive replay directly.
     */
   def applyBatch(batch: DataFrame, batchId: Long, s: Stores): Unit = {
-    // In-batch last-write-wins. Ties on seq are broken by an EXPLICIT
-    // op priority (delete > update > insert — a tombstone racing an
-    // upsert at the same offset must not silently lose), never by the
-    // lexicographic order of the op/source/text strings, which would
-    // make the winner an accident of spelling. A null-text upsert is
-    // coalesced to "" before scoring so the stored row carries a real
-    // (score_micro, pass) instead of nulls that calibrationOn would
-    // bin under a null bin the batch c24 can never produce.
-    val opPrio = when(col("op") === "d", 2)
-      .when(col("op") === "u", 1).otherwise(0)
-    val latest = batch
-      .withColumn("text", coalesce(col("text"), lit("")))
-      .groupBy("doc_id")
-      .agg(max(struct(col("seq"), opPrio.as("prio"), col("op"),
-        col("source"), col("text"))).as("l"))
-      .select(col("doc_id"), col("l.seq").as("seq"), col("l.op").as("op"),
-        col("l.source").as("source"), col("l.text").as("text"))
+    // A null-text upsert is coalesced to "" before scoring so the
+    // stored row carries a real (score_micro, pass) instead of nulls
+    // that calibrationOn would bin under a null bin the batch c24 can
+    // never produce.
+    val latest = StreamApply.latestPerDoc(
+      batch.withColumn("text", coalesce(col("text"), lit(""))), "source", "text")
     val upserts = latest.filter(col("op") =!= "d")
     val scores = graft.ext.Prep.classifierScoresOn(
         graft.ext.Prep.textTokenHashes(upserts))
@@ -112,11 +100,4 @@ object CalibrationStream {
       .select("doc_id", "seq", "op", "score_micro", "pass")
     s.store.merge(rows, batchId)
   }
-
-  /** foreachBatch writer: maintain the calibration state over a CDC
-    * document stream.
-    */
-  def calibrationWriter(docsStream: DataFrame, stores: Stores,
-      checkpoint: String): DataStreamWriter[Row] =
-    StreamApply.batchSink(docsStream, checkpoint)(applyBatch(_, _, stores))
 }

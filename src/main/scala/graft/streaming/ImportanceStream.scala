@@ -15,8 +15,8 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * Per micro-batch of document CHANGE events
   * `(seq, doc_id, source, text, op)`:
   *
-  *   1. last-write-wins WITHIN the batch per doc_id (the same
-  *      `max_by(·, seq)` reduction as the upsert store);
+  *   1. last-write-wins WITHIN the batch per doc_id
+  *      ([[StreamApply.latestPerDoc]]);
   *   2. each surviving upsert tokenizes ONCE into its word counts,
   *      carried as one `terms: array<struct<term, tf>>` row plus the
   *      `source` slice tag (delete survivors carry neither);
@@ -88,11 +88,7 @@ object ImportanceStream {
     * through the merge. Public so tests can drive replay directly.
     */
   def applyBatch(batch: DataFrame, batchId: Long, s: Stores): Unit = {
-    val latest = batch
-      .groupBy("doc_id")
-      .agg(max(struct(col("seq"), col("op"), col("source"), col("text"))).as("l"))
-      .select(col("doc_id"), col("l.seq").as("seq"), col("l.op").as("op"),
-        col("l.source").as("source"), col("l.text").as("text"))
+    val latest = StreamApply.latestPerDoc(batch, "source", "text")
     val tf = latest.filter(col("op") =!= "d")
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))

@@ -1,9 +1,8 @@
 package graft.streaming
 
 import graft.ext.Dedup
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Streaming CLUSTER-LABEL maintenance — incremental connected
   * components over the near-dup graph, the missing piece between the
@@ -113,11 +112,4 @@ object LabelStream {
     s.labels.merge(incoming, batchId)
     NearDupStream.commitIndex(sk, batchId, s.nd) // index LAST
   }
-
-  /** foreachBatch writer: maintain d7 cluster labels over a
-    * `(doc_id, text)` document stream.
-    */
-  def labelWriter(docsStream: DataFrame, stores: Stores,
-      checkpoint: String): DataStreamWriter[Row] =
-    StreamApply.batchSink(docsStream, checkpoint)(applyBatch(_, _, stores))
 }

@@ -15,8 +15,9 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * document versions at ingest time — an update that matches re-alerts
   * (it is a new matching version), an update that stops matching emits
   * nothing (alerts are not retracted — the alert already happened), and
-  * deletes never alert. Within a batch the last write wins first (the
-  * upsert reduction), so a superseded in-batch version never alerts.
+  * deletes never alert. Within a batch the last write wins first
+  * ([[StreamApply.latestPerDoc]]), so a superseded in-batch version
+  * never alerts, nor does an upsert tied with a delete at one `seq`.
   *
   * Per micro-batch: LWW per doc_id → tokenize the upsert survivors into
   * delta postings → the SAME conjunctive-match engine as batch x30
@@ -58,11 +59,7 @@ object PercolateStream {
     */
   def applyBatch(batch: DataFrame, batchId: Long, a: Alerts,
       queries: DataFrame): Unit = {
-    val latest = batch
-      .groupBy("doc_id")
-      .agg(max(struct(col("seq"), col("op"), col("text"))).as("w"))
-      .select(col("doc_id"), col("w.seq").as("seq"), col("w.op").as("op"),
-        col("w.text").as("text"))
+    val latest = StreamApply.latestPerDoc(batch, "text")
     val deltaTf = latest.filter(col("op") =!= "d")
       .select(col("doc_id"), col("seq"), explode(tokens(col("text"))).as("term"))
       .groupBy("doc_id", "seq", "term").agg(count(lit(1)).as("tf"))

@@ -14,9 +14,9 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *
   * Per micro-batch of document CHANGE events `(seq, doc_id, text, op)`:
   *
-  *   1. last-write-wins WITHIN the batch per doc_id (the same
-  *      `max_by(·, seq)` reduction as the upsert store — a feed may
-  *      carry several changes for one document);
+  *   1. last-write-wins WITHIN the batch per doc_id
+  *      ([[StreamApply.latestPerDoc]] — a feed may carry several
+  *      changes for one document);
   *   2. each surviving upsert tokenizes ONCE into its per-term counts,
   *      carried as one `terms: array<struct<term, tf>>` row per
   *      document — the forward index row (delete survivors carry no
@@ -88,12 +88,7 @@ object PostingsStream {
     * index merge. Public so tests can drive replay directly.
     */
   def applyBatch(batch: DataFrame, batchId: Long, s: Stores): Unit = {
-    // within-batch last write per document (the upsert reduction)
-    val latest = batch
-      .groupBy("doc_id")
-      .agg(max(struct(col("seq"), col("op"), col("text"))).as("w"))
-      .select(col("doc_id"), col("w.seq").as("seq"), col("w.op").as("op"),
-        col("w.text").as("text"))
+    val latest = StreamApply.latestPerDoc(batch, "text")
     // the forward-index rows: ONE tokenize pass over the delta only —
     // the exact batch termFreq derivation (explode + per-(doc, term)
     // count), re-gathered to one array row per document

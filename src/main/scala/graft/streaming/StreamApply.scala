@@ -534,6 +534,21 @@ object StreamApply {
       .foreachBatch(apply)
   }
 
+  /** The within-batch fold of the document-change streams (postings,
+    * importance, calibration, percolation): one row per `doc_id`, its
+    * highest `seq`. Ties on `seq` go to the op by an explicit priority,
+    * delete > update > insert, so a tombstone racing an upsert at the
+    * same offset does not lose by the spelling of `op` ("u" > "d"), then
+    * to the larger `cols` values. Output: `doc_id, seq, op, cols`.
+    */
+  private[streaming] def latestPerDoc(batch: DataFrame, cols: String*): DataFrame = {
+    val opPrio = when(col("op") === "d", 2).when(col("op") === "u", 1).otherwise(0)
+    batch.groupBy("doc_id")
+      .agg(max(struct(Seq(col("seq"), opPrio.as("prio"), col("op")) ++
+        cols.map(col): _*)).as("w"))
+      .select(col("doc_id") +: ("seq" +: "op" +: cols).map(c => col(s"w.$c").as(c)): _*)
+  }
+
   /** foreachBatch upsert writer over a normalized CDC event stream. */
   def upsertWriter(events: DataFrame, store: ParquetUpsertStore,
       checkpoint: String): DataStreamWriter[Row] =

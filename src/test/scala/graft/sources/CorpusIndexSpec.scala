@@ -51,7 +51,7 @@ class CorpusIndexSpec extends SparkSpec {
     val mtimes = dir.listFiles().map(f => f.getName -> f.lastModified).toMap
     // simulate a later driver: the catalog entry is gone, the files stay
     spark.sql(s"DROP TABLE $table")
-    graft.ext.Dedup.clearMemos(spark)
+    graft.ext.FrameMemo.clear(spark)
     val again = graft.ext.Dedup.dedupClusters(spark, sf).collect().toSet
     assert(again == before, "re-registered index must serve identical rows")
     val after = dir.listFiles().map(f => f.getName -> f.lastModified).toMap
@@ -117,6 +117,35 @@ class CorpusIndexSpec extends SparkSpec {
     val bucketIds = files.map(_.getName.replaceAll(""".*_(\d+)\.c000.*""", "$1"))
     assert(bucketIds.distinct.length == bucketIds.length,
       s"bucket split across multiple files: ${bucketIds.mkString(",")}")
+  }
+
+  test("an index read records the same dependencies cold and warm") {
+    // a copy with fresh mtimes has its own fingerprint, so its indexes
+    // start cold: the first read builds dup_spans and, inside that
+    // build, token_hashes
+    val corpus = Files.createTempDirectory("graft-corpus-deps")
+    val root = Files.createTempDirectory("graft-index-deps")
+    val src = Paths.get(sf, "documents.parquet")
+    val dst = corpus.resolve("documents.parquet")
+    if (Files.isDirectory(src)) {
+      Files.createDirectories(dst)
+      Files.list(src).forEach(p => Files.copy(p, dst.resolve(p.getFileName)))
+    } else Files.copy(src, dst)
+    spark.conf.set("spark.graft.index.dir", root.toString)
+    try {
+      def deps = CorpusIndex.recordingDeps(
+        graft.ext.Dedup.substringSpans(spark, corpus.toString))._2
+      val cold = deps
+      assert(new File(root.toFile, "token_hashes_" +
+        CorpusIndex.fingerprint(corpus.toString, Seq("documents"))).isDirectory,
+        "the cold read must have built token_hashes")
+      assert(cold == Set("dup_spans"), s"cold: $cold")
+      assert(deps == Set("dup_spans"), "warm")
+    } finally {
+      spark.conf.unset("spark.graft.index.dir")
+      CorpusIndex.deleteRecursively(root)
+      CorpusIndex.deleteRecursively(corpus)
+    }
   }
 
   test("vacuum drops orphaned fingerprints and temp dirs, keeps live ones") {
