@@ -122,15 +122,8 @@ object Bench {
     // SPARK_GRAFT_ONLY=k1,k2,... restricts the batch passes to a subset
     // of registry keys — spot sweeps (e.g. the sf10 decade check on the
     // ten most expensive queries) shouldn't pay the whole registry at a
-    // scale where it runs for hours. Unknown keys fail loudly: a typo'd
-    // sweep that silently measured nothing would read as a 100x speedup.
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_ONLY").map { s =>
-        val ks = s.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        val unknown = ks -- SparkEntry.queries.keySet
-        require(unknown.isEmpty, s"SPARK_GRAFT_ONLY unknown keys: $unknown")
-        ks
-      }
+    // scale where it runs for hours.
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(SparkEntry.select(_).toSet)
     val benched: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
       only.fold(SparkEntry.queries)(ks => SparkEntry.queries.view.filterKeys(ks).toMap)
     // SPARK_GRAFT_BATCH=0 skips the warm pass and the two timed batch
@@ -148,16 +141,16 @@ object Bench {
     // throughput — the min is the steady-state number.
     def timedPass(): Map[String, (Boolean, Double)] = {
       if (skipBatch) return Map.empty
-      // each pass pays the SESSION-scoped FrameMemo entries exactly
-      // once, attributed to their first consumer — without this, pass 2
+      // each pass pays the SESSION-scoped shared frames exactly once,
+      // attributed to their first consumer — without this, pass 2
       // reads pass 1's cache and min-of-passes drops those build costs
       // from the total entirely. The DURABLE corpus indexes
-      // (graft.sources.CorpusIndex) are not memo entries and survive on
+      // (graft.sources.CorpusIndex) are not shared frames and survive on
       // purpose: they are computed once per corpus snapshot — like the
       // corpus parquet itself — so the steady-state number for their
       // consumers is the indexed read, and the one-time build cost lands
       // visibly in pass 1 of the first bench run against a fresh corpus.
-      ext.FrameMemo.clear(spark)
+      Tables.clearShared(spark)
       benched.map { case (name, fn) =>
         // GC between queries lets the ContextCleaner reap the previous
         // query's shuffle files and broadcasts — without it, timings bleed

@@ -15,11 +15,9 @@ import java.nio.file.{Files, Paths}
 object Plans {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, tag) = args.take(3)
-    val only: Option[Set[String]] = args.lift(3).map(_.split(',').toSet)
+    val only = args.lift(3).map(SparkEntry.select(_).toSet)
     val spark = Session.local()
     Files.createDirectories(Paths.get(outDir))
-    val unknown = only.map(_ -- SparkEntry.queries.keySet).getOrElse(Set.empty)
-    require(unknown.isEmpty, s"unknown keys: $unknown")
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .toSeq.sortBy(_._1)

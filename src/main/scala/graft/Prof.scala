@@ -17,7 +17,7 @@ import org.apache.spark.scheduler._
 object Prof {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val names = args(1).split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    val names = SparkEntry.select(args(1))
     val spark = Session.local()
 
     val jobs = new java.util.concurrent.atomic.AtomicLong(0)
@@ -46,8 +46,6 @@ object Prof {
       val d = "/root/testdata/sf0.001"
       if (new java.io.File(d).isDirectory) d else sfDir
     }
-    val unknown = names.toSet -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown keys: $unknown")
     // warm every named query once (classloading, codegen)
     names.foreach { n =>
       try Bench.force(SparkEntry.queries(n)(spark, warmDir))
@@ -55,7 +53,7 @@ object Prof {
     }
     println(f"${"query"}%-28s pass  wall_s  jobs stages  tasks  tasktime_s")
     for (pass <- 1 to 2) {
-      ext.FrameMemo.clear(spark)
+      Tables.clearShared(spark)
       names.foreach { n =>
         System.gc()
         val (j0, s0, t0, tt0) = (jobs.get, stages.get, tasks.get, taskTimeMs.get)

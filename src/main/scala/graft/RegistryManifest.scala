@@ -65,10 +65,10 @@ object RegistryManifest {
     val oracles = SparkEntry.oracleSql.keySet
     val entries = SparkEntry.modules.flatMap { case (mod, qs, _) =>
       qs.keys.toSeq.map { key =>
-        // construction-time dependency recording; memos cleared per key
-        // so a shared chain's indexes attribute to EVERY rider, not
-        // just the first key that happened to build the memo
-        ext.FrameMemo.clear(spark)
+        // construction-time dependency recording; shared frames cleared
+        // per key so a shared chain's indexes attribute to EVERY rider,
+        // not just the first key that happened to build the frame
+        Tables.clearShared(spark)
         val deps =
           try sources.CorpusIndex.recordingDeps(qs(key)(spark, sfDir))._2
           catch { case scala.util.control.NonFatal(_) => Set("<construction-error>") }

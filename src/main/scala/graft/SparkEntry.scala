@@ -47,4 +47,15 @@ object SparkEntry {
 
   def oracleSql: Map[String, String] =
     modules.iterator.map(_._3).reduce(_ ++ _)
+
+  /** The registry keys named by a comma-separated list, trimmed, in
+    * order and without repeats. An unknown key fails by name: a typo'd
+    * run that silently ran nothing would read as a pass.
+    */
+  def select(keys: String): Seq[String] = {
+    val ks = keys.split(',').map(_.trim).filter(_.nonEmpty).toSeq.distinct
+    val unknown = ks.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown registry keys: ${unknown.mkString(", ")}")
+    ks
+  }
 }

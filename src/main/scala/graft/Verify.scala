@@ -9,7 +9,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // Optional third arg: comma-separated query names for a targeted run.
-    val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
+    val only = args.lift(2).map(SparkEntry.select(_).toSet)
     val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     val failed = SparkEntry.queries.toSeq

@@ -932,7 +932,7 @@ object Dedup {
     // only sub-cap clusters ever tokenize into the pair path; LEFT join
     // so an index-less doc (null text — always a singleton) keeps its
     // membership row, as the inline tokenize's null-toks row did
-    val m = FrameMemo.trackPersisted(small.join(toks, Seq("doc_id"), "left")
+    val m = small.join(toks, Seq("doc_id"), "left")
       .select(col("canonical"), col("doc_id"), col("toks"))
       // consumed THREE times (both sides of the pair self-join + the
       // final membership join) — without this the tokenize/sort_array
@@ -943,12 +943,11 @@ object Dedup {
       // pinning starved the pair aggregate's execution memory into
       // AGGREGATE_OUT_OF_MEMORY alongside 32 concurrent tasks — the
       // token frame is corpus-sized, so it belongs on disk, where the
-      // three re-reads cost sequential scans and zero memory. Tracked
-      // with FrameMemo so the next pass-boundary clear() releases the
-      // blocks — repeated d19 invocations in one session (the bench's
-      // median-of-3 × N iterations) must not accumulate disk blocks
-      // until ContextCleaner GC gets around to them.
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
+      // three re-reads cost sequential scans and zero memory. The next
+      // pass-boundary `Tables.clearShared` uncaches it, so repeated d19
+      // invocations in one session do not accumulate disk blocks until
+      // ContextCleaner GC gets around to them.
+      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val pairs = m.alias("a").join(m.alias("b"),
         col("a.canonical") === col("b.canonical") &&
           col("a.doc_id") < col("b.doc_id"))

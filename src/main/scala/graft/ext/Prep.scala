@@ -214,30 +214,29 @@ object Prep {
     bpeTrainedOnDocs(spark, sfDir)._1
 
   /** The corpus BPE artifacts — (ordered merge table, final symbol
-    * table) — memoized per (session, sfDir) through [[FrameMemo]]:
-    * c10, c12 and c18 all
-    * consume the SAME 6-round trainer fold, so a driver run that
-    * executes several of them pays the loop once (each merge round is a
-    * blocking argmax, so three cold trainings were pure repetition). At
-    * 100 TB the production shape is identical: the tokenizer is trained
-    * once per corpus snapshot and every consumer reads the merge/vocab
-    * tables. Cleared per bench pass like every FrameMemo entry, so the
-    * timed total still pays one full training per pass.
+    * table) — shared per (session, sfDir) through [[Tables.shared]]:
+    * c10, c12 and c18 all consume the SAME 6-round trainer fold, so a
+    * driver run that executes several of them pays the loop once (each
+    * merge round is a blocking argmax, so three cold trainings were
+    * pure repetition). At 100 TB the production shape is identical: the
+    * tokenizer is trained once per corpus snapshot and every consumer
+    * reads the merge/vocab tables. Cleared per bench pass like every
+    * shared frame, so the timed total still pays one training per pass.
     */
   private def bpeTrainedOnDocs(spark: SparkSession,
       sfDir: String): (DataFrame, DataFrame) = {
     def tokenFrame = Tables.documents(spark, sfDir)
       .select(explode(tokens(col("text"))).as("t"))
     var built: Option[(DataFrame, DataFrame)] = None
-    val vocab = FrameMemo("bpe:vocab", spark, sfDir) {
+    val vocab = Tables.shared(spark, "bpe_vocab", sfDir) {
       val b = bpeTrainFull(tokenFrame, BpeMerges)
       built = Some(b)
       b._2
     }
-    // vocab hit ⇒ merges was inserted by the same build; the fallback
-    // rebuild only runs if the two entries ever diverge (they are only
+    // vocab hit ⇒ merges was registered by the same build; the fallback
+    // rebuild only runs if the two views ever diverge (they are only
     // cleared together).
-    val merges = FrameMemo("bpe:merges", spark, sfDir)(
+    val merges = Tables.shared(spark, "bpe_merges", sfDir)(
       built.map(_._1).getOrElse(bpeTrainFull(tokenFrame, BpeMerges)._1))
     (merges, vocab)
   }
@@ -895,11 +894,11 @@ object Prep {
     * durable token-hash index) doc-joined to the c21 reference labels.
     */
   private[graft] def calibrationInput(spark: SparkSession, sfDir: String): DataFrame =
-    // FrameMemo-shared (r14 opt): c24 and c25 are the same fold over the
-    // same scored-and-labeled frame — the per-doc classifier scoring and
-    // the 6-HOF gopher predicate ran twice per driver. Doc-keyed, three
+    // shared (r14 opt): c24 and c25 are the same fold over the same
+    // scored-and-labeled frame — the per-doc classifier scoring and the
+    // 6-HOF gopher predicate ran twice per driver. Doc-keyed, three
     // columns, lazily materialized; cleared per bench pass.
-    FrameMemo("qc:calibration", spark, sfDir) {
+    Tables.shared(spark, "qc_calibration", sfDir) {
       val labels = Tables.documents(spark, sfDir)
         .select(col("doc_id"), gopherPass(col("text")).as("pass"))
       qualityClassifier(spark, sfDir)

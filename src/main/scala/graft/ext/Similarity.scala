@@ -133,7 +133,7 @@ object Similarity {
     * oracle's. |cells| rows — the one genuinely-small frame in the ANN
     * family.
     */
-  /** The corpus-path centroid frame is FrameMemo-shared (r14 opt): five
+  /** The corpus-path centroid frame is a shared frame (r14 opt): five
     * registry queries (s5, s8, s13, s15–s17) each rebuilt the identical
     * posexplode → two-aggregate → reassemble pipeline (3–4 sequential
     * AQE stages per query for a |cells|-row result). Lazy-checkpointed
@@ -142,7 +142,7 @@ object Similarity {
     * synthetic corpora through them.
     */
   private def centroidVectors(spark: SparkSession, sfDir: String): DataFrame =
-    graft.ext.FrameMemo("ivf:centroids", spark, sfDir)(
+    Tables.shared(spark, "ivf_centroids", sfDir)(
       centroidVectorsOn(Tables.embeddings(spark, sfDir)).localCheckpoint(false))
 
   private def centroidVectorsOn(emb: DataFrame): DataFrame =

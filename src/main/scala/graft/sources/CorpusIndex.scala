@@ -38,11 +38,11 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * The index root defaults to `target/graft-index` under the working
   * directory (durable across sessions, disposable with a clean);
   * override with the `GRAFT_INDEX_DIR` environment variable or the
-  * `spark.graft.index.dir` session conf. Bucket count defaults to the
-  * session's shuffle partitions on the grounds that consumers reduce on
+  * `spark.graft.index.dir` session conf. The bucket count is the
+  * building session's shuffle partitions, since consumers reduce on
   * the bucket key; a 100 TB deployment sizes it like any fact-table
-  * bucketing (hundreds to thousands) — the value is recorded in the
-  * published table, so readers never guess.
+  * bucketing (hundreds to thousands) through that setting — the value
+  * is recorded in the published table, so readers never guess.
   */
 object CorpusIndex {
 
@@ -119,7 +119,7 @@ object CorpusIndex {
     */
   private def publish(spark: SparkSession, dir: File, key: String,
       sourceTables: Seq[String], build: => DataFrame): Unit = {
-    val n = buckets(spark)
+    val n = spark.sessionState.conf.numShufflePartitions
     val tmp = new File(dir.getParent, s"${dir.getName}.tmp.${
       java.lang.ProcessHandle.current().pid()}.${System.nanoTime()}")
     val tmpTable = s"graft_idx_build_${System.nanoTime()}"
@@ -160,10 +160,6 @@ object CorpusIndex {
   }
 
   private val MetaFile = "_graft_meta"
-
-  private def buckets(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.index.buckets").map(_.toInt)
-      .getOrElse(spark.sessionState.conf.numShufflePartitions)
 
   /** Re-register the published files as a bucketed catalog table for
     * THIS session (the in-memory catalog does not survive the JVM; the

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ext.Portable.tokens
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -88,15 +87,7 @@ object ImportanceStream {
     * through the merge. Public so tests can drive replay directly.
     */
   def applyBatch(batch: DataFrame, batchId: Long, s: Stores): Unit = {
-    val latest = StreamApply.latestPerDoc(batch, "source", "text")
-    val tf = latest.filter(col("op") =!= "d")
-      .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .groupBy("doc_id")
-      .agg(collect_list(struct(col("term"), col("tf"))).as("terms"))
-    val rows = latest.join(tf, Seq("doc_id"), "left")
-      .select("doc_id", "seq", "op", "source", "terms")
-    s.store.merge(rows, batchId)
+    s.store.merge(StreamApply.latestWithTerms(batch, "source"), batchId)
   }
 
   /** foreachBatch writer: maintain the importance model's state over a

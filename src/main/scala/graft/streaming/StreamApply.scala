@@ -549,6 +549,24 @@ object StreamApply {
       .select(col("doc_id") +: ("seq" +: "op" +: cols).map(c => col(s"w.$c").as(c)): _*)
   }
 
+  /** [[latestPerDoc]] over `cols` and `text`, with `text` replaced by
+    * the forward-index row of the postings and importance streams:
+    * `terms`, the document's `(term, tf)` structs from ONE tokenize pass
+    * over the delta — the batch termFreq derivation (explode + count per
+    * (doc, term)) re-gathered to one array per document; null for a
+    * delete. Output: `doc_id, seq, op, cols, terms`.
+    */
+  private[streaming] def latestWithTerms(batch: DataFrame, cols: String*): DataFrame = {
+    val latest = latestPerDoc(batch, cols :+ "text": _*)
+    val tf = latest.filter(col("op") =!= "d")
+      .select(col("doc_id"), explode(graft.ext.Portable.tokens(col("text"))).as("term"))
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+      .groupBy("doc_id")
+      .agg(collect_list(struct(col("term"), col("tf"))).as("terms"))
+    latest.join(tf, Seq("doc_id"), "left")
+      .select((Seq("doc_id", "seq", "op") ++ cols :+ "terms").map(col): _*)
+  }
+
   /** foreachBatch upsert writer over a normalized CDC event stream. */
   def upsertWriter(events: DataFrame, store: ParquetUpsertStore,
       checkpoint: String): DataStreamWriter[Row] =

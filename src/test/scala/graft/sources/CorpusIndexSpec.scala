@@ -51,7 +51,7 @@ class CorpusIndexSpec extends SparkSpec {
     val mtimes = dir.listFiles().map(f => f.getName -> f.lastModified).toMap
     // simulate a later driver: the catalog entry is gone, the files stay
     spark.sql(s"DROP TABLE $table")
-    graft.ext.FrameMemo.clear(spark)
+    graft.Tables.clearShared(spark)
     val again = graft.ext.Dedup.dedupClusters(spark, sf).collect().toSet
     assert(again == before, "re-registered index must serve identical rows")
     val after = dir.listFiles().map(f => f.getName -> f.lastModified).toMap
