@@ -420,7 +420,7 @@ object Bench {
         }
         spark.streams.addListener(listener) // before start: miss no event
         val q = StreamApply.withStreamShuffle(spark)(
-          StreamApply.statefulViewTws(in.toDS())
+          StreamApply.statefulView(in.toDS())
             .writeStream.outputMode("update").format("noop").start())
         val batches = batched((0 until n)
           .map(i => StreamApply.KeyedEvent(i.toLong, i % nKeys,

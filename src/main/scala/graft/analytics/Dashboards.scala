@@ -1,7 +1,7 @@
 package graft.analytics
 
 import graft.Tables
-import graft.cdc.Materialize
+import graft.cdc.{CdcQueries, Materialize}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -149,11 +149,7 @@ object Dashboards {
     */
   private def termsAsof(spark: SparkSession, sfDir: String,
       cut: String): DataFrame =
-    Materialize.customerView(
-        Tables.eventsRaw(spark, sfDir)
-          .filter(col("ts") < lit(java.time.LocalDateTime.parse(cut)))
-          .withColumn("ts", col("ts").cast("timestamp")),
-        Seq("event_type"))
+    CdcQueries.customerViewAsof(spark, sfDir, cut, Seq("event_type"))
       .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
 
   /** q6 — dashboard TOP MOVERS: the Q1 panel diffed between two

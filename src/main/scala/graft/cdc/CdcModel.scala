@@ -42,14 +42,6 @@ object CdcModel {
     StructField("created_at", TimestampType, nullable = true)
   ))
 
-  /** Full Debezium envelope (pre-unwrap): `{op, before, after, ts_ms}`. */
-  val envelopeSchema: StructType = StructType(Seq(
-    StructField("op", StringType, nullable = true),
-    StructField("before", customerSchema, nullable = true),
-    StructField("after", customerSchema, nullable = true),
-    StructField("ts_ms", LongType, nullable = true)
-  ))
-
   /** Delete-rewrite shape also carries `op`/`before` at the top level when
     * the flat shape is in effect — one permissive schema covers both wire
     * shapes 1 and 2: flat-row columns plus optional `op`/`before`.
@@ -60,14 +52,6 @@ object CdcModel {
       StructField("before", customerSchema, nullable = true),
       StructField("after", customerSchema, nullable = true)
     ))
-
-  /** Normalized internal event. `seq` is the total-order stand-in. */
-  val eventSchema: StructType = StructType(Seq(
-    StructField("seq", LongType, nullable = false),
-    StructField("key", IntegerType, nullable = false),
-    StructField("op", StringType, nullable = false), // "c" | "u" | "d"
-    StructField("row", customerSchema, nullable = true) // null iff op == "d"
-  ))
 
   /** Maps the driver testdata `events` table (TESTDATA.md) onto the CDC
     * event model: `event_id`=seq, `user_id`=key, `event_type`=op

@@ -123,22 +123,28 @@ object CdcQueries {
       .dropDuplicates("event_id")
   }
 
-  /** O14 — snapshot-as-of (time travel): the O10 view reconstructed at a
-    * past instant by materializing only events at or before the cutoff.
-    * The event log IS the history — any past state is a filter away
-    * (the batch counterpart of [[graft.ext.Temporal.scd2History]], which
-    * materializes ALL states as intervals). The cutoff compares the RAW
-    * stored TIMESTAMP_NTZ column against an NTZ literal, before the
-    * canonical TIMESTAMP cast, so it reaches the parquet scan as a
-    * pushed filter and the rebuild reads only the prefix's rowgroups —
-    * a predicate on the cast column could never push.
+  /** The O10 view AS OF `cutoff` (an ISO local date-time), rebuilt from
+    * the events before it: the event log IS the history, so any past
+    * state is a filter away. The cutoff compares the RAW stored
+    * TIMESTAMP_NTZ column against an NTZ literal, before the canonical
+    * TIMESTAMP cast, so it reaches the parquet scan as a pushed filter
+    * and the rebuild reads only the prefix's rowgroups — a predicate on
+    * the cast column could never push. `payloadCols` prunes as in
+    * [[Materialize.customerView]].
     */
-  def snapshotAsof(spark: SparkSession, sfDir: String): DataFrame = {
-    val cutoff = java.time.LocalDateTime.parse("2024-01-10T00:00:00")
+  def customerViewAsof(spark: SparkSession, sfDir: String, cutoff: String,
+      payloadCols: Seq[String] = Materialize.CustomerPayload): DataFrame =
     Materialize.customerView(Tables.eventsRaw(spark, sfDir)
-      .filter(col("ts") < lit(cutoff))
-      .withColumn("ts", col("ts").cast("timestamp")))
-  }
+      .filter(col("ts") < lit(java.time.LocalDateTime.parse(cutoff)))
+      .withColumn("ts", col("ts").cast("timestamp")), payloadCols)
+
+  /** O14 — snapshot-as-of (time travel): the O10 view at a past instant,
+    * [[customerViewAsof]] (the batch counterpart of
+    * [[graft.ext.Temporal.scd2History]], which materializes ALL states
+    * as intervals).
+    */
+  def snapshotAsof(spark: SparkSession, sfDir: String): DataFrame =
+    customerViewAsof(spark, sfDir, "2024-01-10T00:00:00")
 
   /** O15 — schema enforcement + dead-letter routing: the wire is parsed
     * with `from_json` against the declared schema; records that fail to
@@ -376,19 +382,15 @@ object CdcQueries {
     *
     * Shape: two cutoff-filtered materializations (each cutoff pushes into
     * the scan as an NTZ predicate, rowgroup-prunable — see
-    * [[snapshotAsof]]) feeding one FULL OUTER join on the key. Both sides
+    * [[customerViewAsof]]) feeding one FULL OUTER join on the key. Both sides
     * hash-partition on `user_id` for their latest-per-key window, and the
     * join reuses that co-partitioning — at 100 TB: two pruned scans, two
     * narrow shuffles, no extra exchange for the join.
     */
   def snapshotDiff(spark: SparkSession, sfDir: String): DataFrame = {
-    def snap(cutoff: String): DataFrame =
-      Materialize.customerView(Tables.eventsRaw(spark, sfDir)
-        .filter(col("ts") < lit(java.time.LocalDateTime.parse(cutoff)))
-        .withColumn("ts", col("ts").cast("timestamp")))
-    val s1 = snap("2024-01-10T00:00:00")
+    val s1 = customerViewAsof(spark, sfDir, "2024-01-10T00:00:00")
       .select(col("user_id"), col("event_id").as("old_seq"))
-    val s2 = snap("2024-01-20T00:00:00")
+    val s2 = customerViewAsof(spark, sfDir, "2024-01-20T00:00:00")
       .select(col("user_id"), col("event_id").as("new_seq"))
     s1.join(s2, Seq("user_id"), "full_outer")
       .withColumn("change",

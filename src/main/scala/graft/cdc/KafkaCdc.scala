@@ -45,16 +45,6 @@ object KafkaCdc {
       .option("kafka.isolation.level", "read_committed")
       .load())
 
-  /** Batch source over a bounded offset range (backfill / repair). */
-  def readBatch(spark: SparkSession, bootstrap: String,
-      topic: String = "cdc-pg.public.customer"): DataFrame =
-    wireFrame(spark.read.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrap)
-      .option("subscribe", topic)
-      .option("startingOffsets", "earliest")
-      .option("endingOffsets", "latest")
-      .load())
-
   /** Write side (the connector-analog): rows → keyed JSON records on the
     * topic, key := id (`ValueToKey` SMT, `terraform/main.tf:257-258`).
     */

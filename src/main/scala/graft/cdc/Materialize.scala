@@ -50,6 +50,9 @@ object Materialize {
       .drop("__op")
   }
 
+  /** Every payload column of the testdata `events` table. */
+  val CustomerPayload: Seq[String] = Seq("ts", "event_type", "value", "props")
+
   /** The view over the testdata `events` stream analog: latest non-deleted
     * state per `user_id` (event_type `error` = delete). `payloadCols`
     * prunes the materialization to what the consumer actually reads: the
@@ -59,7 +62,7 @@ object Materialize {
     * shuffling (key, seq, type) and shuffling whole rows.
     */
   def customerView(events: DataFrame,
-      payloadCols: Seq[String] = Seq("ts", "event_type", "value", "props")): DataFrame =
+      payloadCols: Seq[String] = CustomerPayload): DataFrame =
     view(events, key = "user_id", seq = "event_id", op = col("event_type"),
       deleteOp = "error", payloadCols = payloadCols)
 }

@@ -37,18 +37,17 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *
   * The index root defaults to `target/graft-index` under the working
   * directory (durable across sessions, disposable with a clean);
-  * override with the `GRAFT_INDEX_DIR` environment variable or the
-  * `spark.graft.index.dir` session conf. The bucket count is the
-  * building session's shuffle partitions, since consumers reduce on
-  * the bucket key; a 100 TB deployment sizes it like any fact-table
-  * bucketing (hundreds to thousands) through that setting — the value
-  * is recorded in the published table, so readers never guess.
+  * override with the `spark.graft.index.dir` session conf. The bucket
+  * count is the building session's shuffle partitions, since consumers
+  * reduce on the bucket key; a 100 TB deployment sizes it like any
+  * fact-table bucketing (hundreds to thousands) through that setting —
+  * the value is recorded in the published table, so readers never
+  * guess.
   */
 object CorpusIndex {
 
   private def root(spark: SparkSession): String =
-    sys.env.get("GRAFT_INDEX_DIR")
-      .orElse(spark.conf.getOption("spark.graft.index.dir"))
+    spark.conf.getOption("spark.graft.index.dir")
       .getOrElse(new File(sys.props.getOrElse("user.dir", "."),
         "target/graft-index").getPath)
 

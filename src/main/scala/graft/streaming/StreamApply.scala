@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -174,25 +174,8 @@ object StreamApply {
       recorded.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
     }
 
-    /** Next version name: the triggering batch id plus a monotone epoch,
-      * so a replayed batch id never reuses a directory name.
-      */
-    def nextVersionName(batchId: Long): String = {
-      val epoch = currentVersion().map(epochOf(_) + 1).getOrElse(0L)
-      s"$VersionPrefix${batchId}_e$epoch"
-    }
-
-    def epochOf(ver: String): Long =
+    private def epochOf(ver: String): Long =
       ver.substring(ver.lastIndexOf('e') + 1).toLong
-
-    /** Version name for a compaction rewrite — same epoch monotonicity
-      * as [[nextVersionName]], labelled so a directory listing shows
-      * which versions were maintenance rewrites.
-      */
-    def nextCompactName(): String = {
-      val epoch = currentVersion().map(epochOf(_) + 1).getOrElse(0L)
-      s"${VersionPrefix}compact_e$epoch"
-    }
 
     private def deleteRecursively(p: java.nio.file.Path): Unit =
       graft.sources.CorpusIndex.deleteRecursively(p)
@@ -201,14 +184,14 @@ object StreamApply {
       * (torn writes, superseded states) and orphaned pointer tmp files.
       * Purely a space matter — correctness never depends on cleanup
       * having run, because readers only ever follow `CURRENT`.
-      * Idempotent; called ONLY from writer paths: a reader must never
+      * Idempotent; called ONLY from [[commit]]: a reader must never
       * delete — another process's writer may have written a version dir
       * it has not pointer-committed yet. The immediately superseded
       * version (epoch = live epoch − 1) is retained one merge longer,
       * so a lazy snapshot frame handed out before the latest commit
       * still has its files for one more cycle.
       */
-    def clean(): Unit = {
+    private def clean(): Unit = {
       val d = Paths.get(dir)
       if (!Files.isDirectory(d)) return
       val live = currentVersion()
@@ -244,6 +227,26 @@ object StreamApply {
         ch.force(true)
       } finally ch.close()
       Files.move(tmp, currentPath, StandardCopyOption.ATOMIC_MOVE)
+    }
+
+    /** The one version commit every writer runs (merges of both stores,
+      * compaction): name the next version `state_v<label>_e<epoch>`, its
+      * epoch one past the live version's so a replayed batch id never
+      * writes over a committed version; write its tables with
+      * `writeTables`; publish it with [[commitPointer]], the single
+      * atomic step; then [[clean]] what the pointer no longer references.
+      * A crash before the swing leaves an unreferenced directory,
+      * collected by the next commit's `clean`, or replaced by its
+      * [[write]], which overwrites, when that commit reuses the name.
+      * Returns the committed version.
+      */
+    def commit(label: String)(writeTables: String => Unit): String = {
+      val epoch = currentVersion().map(epochOf(_) + 1).getOrElse(0L)
+      val ver = s"$VersionPrefix${label}_e$epoch"
+      writeTables(ver)
+      commitPointer(ver)
+      clean()
+      ver
     }
   }
 
@@ -308,9 +311,9 @@ object StreamApply {
     *     or a crash observes the old state or the new state, never a
     *     mix and never an in-between with no state at all;
     *   - everything `CURRENT` does not reference is garbage, collected
-    *     idempotently on every entry — a torn version write is simply
-    *     never referenced, and a crash after the rename only leaves
-    *     collectable strays;
+    *     idempotently after every commit ([[ManifestDir.commit]]) — a
+    *     torn version write is simply never referenced, and a crash
+    *     after the rename only leaves collectable strays;
     *   - each version directory holds `_schema.json`, the schema its
     *     writer wrote, saved before the pointer swings (Delta keeps the
     *     schema in its log for the same reason). Readers and the next
@@ -328,9 +331,9 @@ object StreamApply {
     *
     * Concurrency contract: ONE writer at a time (Structured Streaming
     * guarantees this per checkpoint); any number of readers. Readers
-    * never delete anything — garbage collection runs only inside
-    * [[merge]] — so a concurrent reader can never unlink a version a
-    * writer has written but not yet committed.
+    * never delete anything — garbage collection runs only inside a
+    * writer's commit — so a concurrent reader can never unlink a version
+    * a writer has written but not yet committed.
     */
   final class ParquetUpsertStore(spark: SparkSession, dir: String,
       key: String, seq: String, opCol: String, deleteOp: String,
@@ -362,39 +365,14 @@ object StreamApply {
       * never overwrites the directory it is reading from, and the live
       * state is never touched until the pointer swings.
       */
-    def merge(batch: DataFrame, batchId: Long): Unit = {
-      manifest.clean()
-      val next = mergedFrame(batch)
-      val ver = manifest.nextVersionName(batchId)
-      manifest.write(next, ver)
-      manifest.commitPointer(ver) // the single atomic step
-      manifest.clean()            // superseded version is now garbage
-    }
+    def merge(batch: DataFrame, batchId: Long): Unit =
+      manifest.commit(batchId.toString)(manifest.write(mergedFrame(batch), _))
 
     /** Serving view: live (non-deleted) rows only. */
     def view(): DataFrame = {
       val s = snapshot()
       if (s.schema.isEmpty) s else s.filter(col(opCol) =!= deleteOp)
     }
-
-    /** OPTIMIZE-style maintenance: rewrite the live state into
-      * `numFiles` files and publish it through the SAME single-pointer
-      * commit as [[merge]] — readers observe the old layout or the new
-      * one, never a mix, and a crash mid-compaction leaves only an
-      * unreferenced directory for the next writer's clean(). A merge
-      * writes one part file per post-shuffle partition. AQE's coalescing
-      * (on by default) merges them down to about the core count, but not
-      * below ~1 MB of shuffle data each: a small store is born as one
-      * file, a 100k-key store at 4 cores as 4; with coalescing off every
-      * merge writes `spark.sql.shuffle.partitions` files. Each file costs
-      * the snapshot scan its own open — the read amplification Delta's
-      * OPTIMIZE / Iceberg's rewrite_data_files exists to fix, reduced to
-      * this store's commit protocol. WRITER
-      * operation (single-writer contract applies): run it from the
-      * maintenance path, never concurrently with merge.
-      */
-    def compact(numFiles: Int = 1): Unit =
-      manifest.currentVersion().foreach(rewrite(spark, manifest, _, Seq(""), numFiles))
   }
 
   /** Every manifest-pointer store under `root` — any directory holding
@@ -441,20 +419,6 @@ object StreamApply {
         v -> leaves.map(l => l -> parquetParts(man.leafPath(v, l)))
       }
 
-  /** The one compaction rewrite: tables `leaves` of version `v`, each
-    * coalesced to `numFiles` files, written into one new version that a
-    * single pointer swing publishes, so the tables cannot diverge.
-    * Returns the new version's name.
-    */
-  private def rewrite(spark: SparkSession, man: ManifestDir, v: String,
-      leaves: Seq[String], numFiles: Int): String = {
-    val ver = man.nextCompactName()
-    leaves.foreach(l => man.write(man.open(spark, v, l).coalesce(numFiles), ver, l))
-    man.commitPointer(ver)
-    man.clean()
-    ver
-  }
-
   /** Read-only fleet CENSUS: per discovered store, the live version's
     * part-file count (None = a `CURRENT` pointer exists but references
     * no readable version yet). This is what lets a maintenance marker
@@ -463,7 +427,7 @@ object StreamApply {
     * the r13 driver artifact's `20/0/0/0` was genuinely the former
     * (the dial stores are small, and AQE coalesces a small merge's
     * output to one part file, so a fresh dial fleet is born compact;
-    * see [[ParquetUpsertStore.compact]]), but the marker alone could
+    * see [[compactStores]]), but the marker alone could
     * not say so because `files_before` sums only REWRITTEN stores.
     */
   def storeCensus(root: String): Seq[(String, Option[Long])] =
@@ -471,37 +435,50 @@ object StreamApply {
       sd.toString -> liveTables(new ManifestDir(sd.toString)).map(_._2.map(_._2).sum)
     }
 
-  /** FLEET maintenance: find every manifest-pointer store under `root`
-    * (any directory holding a `CURRENT` file — the one invariant every
-    * versioned store in this repo shares) and OPTIMIZE it through the
-    * store's own commit protocol, with no knowledge of which stream
-    * owns it or what schema it holds. Multi-table stores (IVM's
-    * `state/` + `agg/` living inside one version directory) are
-    * detected from the version layout and each leaf is rewritten into
-    * the SAME new version, so the tables can never diverge across the
-    * one pointer swing. A store whose live version is already at the
-    * target file count is SKIPPED — the job is idempotent and a second
-    * run reports nothing, which the spec asserts.
+  /** FLEET maintenance, the one compaction entry: find every
+    * manifest-pointer store under `root` (any directory holding a
+    * `CURRENT` file — the one invariant every versioned store in this
+    * repo shares) and OPTIMIZE it: rewrite each table of its live
+    * version into one part file and publish the rewrite through the
+    * store's own [[ManifestDir.commit]], labelled `compact`, with no
+    * knowledge of which stream owns it or what schema it holds. Readers
+    * observe the old layout or the new one, never a mix, and a crash
+    * mid-compaction leaves only an unreferenced directory for the next
+    * commit to collect. Multi-table stores (IVM's `state/` + `agg/`
+    * living inside one version directory) are detected from the version
+    * layout and each leaf is rewritten into the SAME new version, so the
+    * tables can never diverge across the one pointer swing. A store
+    * whose live version already holds one file per table is SKIPPED —
+    * the job is idempotent and a second run reports nothing, which the
+    * spec asserts.
     *
-    * This is the unified entry the fleet previously lacked: every
-    * `Stores` wrapper (postings, labels, ann, calib, chunk owners, …)
-    * bottoms out in manifest-pointer directories, so "compact the
-    * fleet" is a directory walk, not a per-stream enumeration that
-    * goes stale the next time a stream is added. Returns
-    * (storeDir, filesBefore, filesAfter) for each store actually
-    * rewritten. WRITER operation — same single-writer contract as
-    * merge/compact; run from the maintenance path only.
+    * Why one file: a merge writes one part file per post-shuffle
+    * partition. AQE's coalescing (on by default) merges them down to
+    * about the core count, but not below ~1 MB of shuffle data each: a
+    * small store is born as one file, a 100k-key store at 4 cores as 4;
+    * with coalescing off every merge writes `spark.sql.shuffle.partitions`
+    * files. Each file costs the snapshot scan its own open — the read
+    * amplification Delta's OPTIMIZE / Iceberg's rewrite_data_files
+    * exists to fix, reduced to this store's commit protocol.
+    *
+    * Every `Stores` wrapper (postings, labels, ann, calib, chunk owners,
+    * …) bottoms out in manifest-pointer directories, so "compact the
+    * fleet" is a directory walk, not a per-stream enumeration that goes
+    * stale the next time a stream is added. Returns (storeDir,
+    * filesBefore, filesAfter) for each store actually rewritten. WRITER
+    * operation — same single-writer contract as merge; run from the
+    * maintenance path only, never concurrently with a merge.
     */
-  def compactStores(spark: SparkSession, root: String,
-      numFiles: Int = 1): Seq[(String, Long, Long)] =
+  def compactStores(spark: SparkSession, root: String): Seq[(String, Long, Long)] =
     discoverStores(root).sortBy(_.toString).flatMap { sd =>
       val man = new ManifestDir(sd.toString)
       liveTables(man).flatMap { case (v, tables) =>
         val before = tables.map(_._2).sum
-        if (before <= numFiles.toLong * tables.size) None
+        if (before <= tables.size) None
         else {
           val leaves = tables.map(_._1)
-          val ver = rewrite(spark, man, v, leaves, numFiles)
+          val ver = man.commit("compact")(next =>
+            leaves.foreach(l => man.write(man.open(spark, v, l).coalesce(1), next, l)))
           Some((sd.toString, before, leaves.map(l => parquetParts(man.leafPath(ver, l))).sum))
         }
       }
@@ -636,41 +613,40 @@ object StreamApply {
     }
 
     def merge(batch: DataFrame, batchId: Long): Unit = {
-      manifest.clean()
       val curAgg = manifest.currentVersion().map(aggAt).getOrElse(
         batch.select(col(aggCol)).limit(0).withColumn("n", lit(0L)))
-      val ver = manifest.nextVersionName(batchId)
-      manifest.write(stateFrame(batch), ver, "state")
-      // Signed delta from the changelog columns alone: −1 for the old
-      // winner's value if it was live, +1 for the new winner's if live —
-      // both rows unfolded from the ONE touched-state row. A replayed
-      // batch leaves every touched row as it was, so its −1 and +1
-      // cancel. Reading the just-written bytes (the ones the pointer is
-      // about to publish) keeps the merge single-evaluation without
-      // pinning state in executor memory.
-      val st = stateAt(ver)
-        .filter(col("__touched") === 1)
-        .select(col(aggCol), col(opCol), col("__old_op"), col("__old_cat"))
-      val delta = st.select(explode(array(
-          struct(col("__old_cat").as(aggCol),
-            when(col("__old_op").isNotNull && col("__old_op") =!= deleteOp,
-              -1L).otherwise(0L).as("w")),
-          struct(col(aggCol),
-            when(col(opCol) =!= deleteOp, 1L).otherwise(0L).as("w")))).as("d"))
-        .select(col(s"d.$aggCol").as(aggCol), col("d.w").as("w"))
-        .filter(col("w") =!= 0L)
-      // ONE aggregation total: the running aggregate joins the delta
-      // stream BEFORE the groupBy, so there is no second (delta-only)
-      // shuffle stage
-      val newAgg = delta
-        .unionByName(curAgg.select(col(aggCol), col("n").as("w")))
-        .groupBy(aggCol).agg(sum("w").as("n"))
-        .filter(col("n") > 0)
-      // the maintained aggregate is small by definition (one row per
-      // aggCol value) — one output file, not one per shuffle partition
-      manifest.write(newAgg.coalesce(1), ver, "agg")
-      manifest.commitPointer(ver) // ONE atomic step commits both tables
-      manifest.clean()
+      // ONE commit publishes both tables
+      manifest.commit(batchId.toString) { ver =>
+        manifest.write(stateFrame(batch), ver, "state")
+        // Signed delta from the changelog columns alone: −1 for the old
+        // winner's value if it was live, +1 for the new winner's if live
+        // — both rows unfolded from the ONE touched-state row. A replayed
+        // batch leaves every touched row as it was, so its −1 and +1
+        // cancel. Reading the just-written bytes (the ones the pointer is
+        // about to publish) keeps the merge single-evaluation without
+        // pinning state in executor memory.
+        val st = stateAt(ver)
+          .filter(col("__touched") === 1)
+          .select(col(aggCol), col(opCol), col("__old_op"), col("__old_cat"))
+        val delta = st.select(explode(array(
+            struct(col("__old_cat").as(aggCol),
+              when(col("__old_op").isNotNull && col("__old_op") =!= deleteOp,
+                -1L).otherwise(0L).as("w")),
+            struct(col(aggCol),
+              when(col(opCol) =!= deleteOp, 1L).otherwise(0L).as("w")))).as("d"))
+          .select(col(s"d.$aggCol").as(aggCol), col("d.w").as("w"))
+          .filter(col("w") =!= 0L)
+        // ONE aggregation total: the running aggregate joins the delta
+        // stream BEFORE the groupBy, so there is no second (delta-only)
+        // shuffle stage
+        val newAgg = delta
+          .unionByName(curAgg.select(col(aggCol), col("n").as("w")))
+          .groupBy(aggCol).agg(sum("w").as("n"))
+          .filter(col("n") > 0)
+        // the maintained aggregate is small by definition (one row per
+        // aggCol value) — one output file, not one per shuffle partition
+        manifest.write(newAgg.coalesce(1), ver, "agg")
+      }
     }
   }
 
@@ -856,7 +832,7 @@ object StreamApply {
           col(rightTs) <= col(tsCol),
         "leftOuter")
 
-  // ---- mapGroupsWithState variant of the keyed view ---------------------
+  // ---- the keyed view on custom streaming state --------------------------
 
   /** Normalized CDC event for the typed stateful path. */
   case class KeyedEvent(seq: Long, key: Int, op: String, value: Double)
@@ -869,37 +845,16 @@ object StreamApply {
     val Empty: KeyState = KeyState(Long.MinValue, 0.0, deleted = true)
   }
 
-  /** One event applied to a key's state — the keyed views' one fold
-    * step: highest `seq` wins, a delete tombstones the key.
+  /** One event applied to a key's state — the keyed view's fold step:
+    * highest `seq` wins, a delete tombstones the key.
     */
   private def step(s: KeyState, e: KeyedEvent): KeyState =
     if (e.seq <= s.seq) s // stale replay — state already newer
     else if (e.op == "d") KeyState(e.seq, 0.0, deleted = true)
     else KeyState(e.seq, e.value, deleted = false)
 
-  /** The keyed view as CUSTOM STREAMING STATE — the
-    * `mapGroupsWithState` alternative to the `foreachBatch` merge: state
-    * lives in Spark's state store (shuffle-partitioned by key, bounded by
-    * the live-key set, checkpointed), and each micro-batch emits the
-    * updated row per touched key. Same fold semantics as
-    * [[graft.cdc.Materialize]]: highest `seq` wins, deletes tombstone the
-    * key (state is KEPT so an out-of-order older event cannot resurrect
-    * it).
-    */
-  def statefulView(events: Dataset[KeyedEvent]): Dataset[(Int, KeyState)] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.key)
-      .mapGroupsWithState[KeyState, (Int, KeyState)](GroupStateTimeout.NoTimeout) {
-        (key, batch, state) =>
-          val next = batch.foldLeft(state.getOption.getOrElse(KeyState.Empty))(step)
-          state.update(next)
-          key -> next
-      }
-  }
-
-  /** The keyed view on the MODERN state API (Spark 4
-    * `transformWithState`): same last-write-wins fold as [[statefulView]],
-    * but state lives in a named `ValueState` variable whose TTL is
+  /** [[statefulView]]'s processor on the Spark 4 `transformWithState`
+    * API: the key's state lives in a named `ValueState` whose TTL is
     * enforced BY THE STATE STORE itself (`TTLConfig`) rather than by
     * hand-managed timers — every update refreshes the key's TTL, so hot
     * keys persist and idle keys age out without any timer bookkeeping in
@@ -928,44 +883,30 @@ object StreamApply {
     }
   }
 
-  /** [[statefulView]] rebuilt on [[KeyedViewProcessor]]. */
-  def statefulViewTws(events: Dataset[KeyedEvent],
+  /** The keyed view as CUSTOM STREAMING STATE — the state-store
+    * alternative to the `foreachBatch` merge: state lives in Spark's
+    * state store (shuffle-partitioned by key, checkpointed), and each
+    * micro-batch emits the updated row per touched key. Same fold
+    * semantics as [[graft.cdc.Materialize]]: highest `seq` wins, deletes
+    * tombstone the key (state is KEPT so an out-of-order older event
+    * cannot resurrect it).
+    *
+    * `ttl` is the redelivery horizon, for every key: a key's state,
+    * live or tombstoned, is evicted once no event has reached it for
+    * `ttl`. Without eviction, dead keys would accumulate forever and
+    * state would grow with the key-churn HISTORY instead of the live-key
+    * set. After the horizon a replay of older events is assumed
+    * impossible (the contract a watermark encodes), so a late stale
+    * event for an evicted key re-creates it. Runs in processing-time
+    * mode, which the store TTL needs; set the RocksDB provider
+    * ([[withRocksDbState]]) before the query starts.
+    */
+  def statefulView(events: Dataset[KeyedEvent],
       ttl: java.time.Duration = java.time.Duration.ofMinutes(10)): Dataset[(Int, KeyState)] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.key)
       .transformWithState(new KeyedViewProcessor(ttl),
         org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
         org.apache.spark.sql.streaming.OutputMode.Update())
-  }
-
-  /** [[statefulView]] with a tombstone TTL: a deleted key keeps its
-    * tombstone (still blocking stale replays) for `ttlMs` of processing
-    * time, then its state is REMOVED. Without eviction, dead keys
-    * accumulate forever and state grows with the key-churn HISTORY
-    * instead of the live-key set — the difference between bounded and
-    * unbounded state on a 100 TB-scale churny stream. The TTL is the
-    * redelivery horizon: after it, a replay of pre-delete events is
-    * assumed impossible (the same contract a watermark encodes), so a
-    * late stale event after eviction re-creates the key — accepted, and
-    * exactly what the spec demonstrates. Live keys never time out.
-    */
-  def statefulViewWithTtl(events: Dataset[KeyedEvent],
-      ttlMs: Long = 600000L): Dataset[(Int, KeyState)] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.key)
-      .mapGroupsWithState[KeyState, (Int, KeyState)](
-        GroupStateTimeout.ProcessingTimeTimeout) {
-        (key, batch, state) =>
-          if (state.hasTimedOut) {
-            val last = state.get
-            state.remove() // tombstone past the horizon — state evicted
-            key -> last
-          } else {
-            val next = batch.foldLeft(state.getOption.getOrElse(KeyState.Empty))(step)
-            state.update(next)
-            if (next.deleted) state.setTimeoutDuration(ttlMs)
-            key -> next
-          }
-      }
   }
 }

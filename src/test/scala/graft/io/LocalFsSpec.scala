@@ -61,7 +61,7 @@ class LocalFsSpec extends SparkSpec with PlannerCells {
     (2 to 50 by 4).map(k => FsEv(k, 200 + k, "c", s"o$k")))
 
   /** Process starts per step of the CDC apply path: flat merges,
-    * `compact`, `compactStores`, an IVM merge and three triggers of an
+    * `compactStores`, an IVM merge and three triggers of an
     * `upsertWriter` query (its start counted apart).
     */
   private def applyPath(root: Path): Seq[(String, Seq[String])] = {
@@ -77,7 +77,6 @@ class LocalFsSpec extends SparkSpec with PlannerCells {
     val steps = Seq(
       step("first flat merge")(merged.merge(df(batches(0)), 0)),
       step("later flat merge")(merged.merge(df(batches(1)), 1)),
-      step("compact")(merged.compact()),
       step("compactStores") {
         withConfs(noCoalesce)(fleet.merge(df(batches(0)), 0))
         assert(StreamApply.compactStores(spark, s"$root/fleet").nonEmpty)

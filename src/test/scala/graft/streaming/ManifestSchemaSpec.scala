@@ -140,8 +140,6 @@ class ManifestSchemaSpec extends SparkSpec {
     assertRecorded(s"$ivmDir/${live(ivmDir)}/agg")
 
     flat.merge(df(batch3), 2)
-    flat.compact()
-    assert(live(flatDir).contains("compact"))
     assertRecorded(s"$flatDir/${live(flatDir)}")
   }
 

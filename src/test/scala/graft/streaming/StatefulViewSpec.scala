@@ -3,128 +3,85 @@ package graft.streaming
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-/** The mapGroupsWithState keyed view: state-store-backed CDC
-  * materialization must equal the batch fold, and stale replays must not
-  * regress newer state.
+/** The keyed view on `transformWithState`: state-store-backed CDC
+  * materialization must equal the batch fold, stale replays must not
+  * regress newer state, and the store TTL must evict a key's state after
+  * the redelivery horizon.
   */
 class StatefulViewSpec extends SparkSpec {
   import StreamApply.{KeyedEvent, statefulView}
 
+  /** The rows the memory sink `name` holds so far, as
+    * `(key, seq, value, deleted)`.
+    */
+  private def rows(name: String) = spark.table(name)
+    .selectExpr("_1 as key", "_2.seq as seq", "_2.value as value", "_2.deleted as deleted")
+    .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2), r.getBoolean(3)))
+
+  /** Poll sink `name` until `n` rows equal `want`. A ProcessingTime-mode
+    * query (required for store TTL) never quiesces, so
+    * processAllAvailable cannot be relied on.
+    */
+  private def awaitRows(name: String, want: (Int, Long, Double, Boolean),
+      what: String, n: Int = 1): Unit = {
+    val deadline = System.currentTimeMillis() + 60000
+    while (rows(name).count(_ == want) < n) {
+      assert(System.currentTimeMillis() < deadline,
+        s"$what never appeared; table=${rows(name).toSeq}")
+      Thread.sleep(100)
+    }
+  }
+
   test("stateful view converges to last-write-wins with tombstones kept") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val in = MemoryStream[KeyedEvent]
-    val q = statefulView(in.toDS()).writeStream
-      .outputMode("update").format("memory").queryName("sv_out").start()
-    try {
-      in.addData(Seq(
-        KeyedEvent(1, 1, "c", 1.0), KeyedEvent(2, 2, "c", 2.0)))
-      q.processAllAvailable()
-      in.addData(Seq(
-        KeyedEvent(3, 1, "u", 1.5), KeyedEvent(4, 2, "d", 0.0)))
-      q.processAllAvailable()
-      // stale replay of seq 1 after the key was updated at seq 3
-      in.addData(Seq(KeyedEvent(1, 1, "c", 1.0)))
-      q.processAllAvailable()
-    } finally q.stop()
-
-    val rows = spark.table("sv_out")
-      .selectExpr("_1 as key", "_2.seq as seq", "_2.value as value", "_2.deleted as deleted")
-      .collect()
-    // latest emission per key
-    val last = rows.groupBy(_.getInt(0)).map { case (k, rs) =>
-      val r = rs.maxBy(_.getLong(1))
-      k -> (r.getLong(1), r.getDouble(2), r.getBoolean(3))
-    }
-    assert(last(1) == ((3L, 1.5, false)), s"key 1 state wrong: ${last(1)}")
-    assert(last(2) == ((4L, 0.0, true)), s"key 2 not tombstoned: ${last(2)}")
-  }
-
-  test("transformWithState view matches the mapGroupsWithState fold") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    // A ProcessingTime-mode query (required for store TTL) never
-    // quiesces, so processAllAvailable cannot be relied on — poll the
-    // output table against a deadline instead (same caveat as the
-    // mapGroupsWithState TTL test below).
-    def rows() = spark.table("tws_out")
-      .selectExpr("_1 as key", "_2.seq as seq", "_2.value as value", "_2.deleted as deleted")
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2), r.getBoolean(3)))
-    def awaitRow(want: (Int, Long, Double, Boolean), what: String): Unit = {
-      val deadline = System.currentTimeMillis() + 60000
-      while (!rows().contains(want)) {
-        assert(System.currentTimeMillis() < deadline,
-          s"$what never appeared; table=${rows().toSeq}")
-        Thread.sleep(100)
-      }
-    }
     // transformWithState requires the RocksDB provider (also the one a
     // large deployment runs — disk-backed state, changelog checkpoints)
     withRocksDb {
       val in = MemoryStream[KeyedEvent]
-      val q = StreamApply.statefulViewTws(in.toDS()).writeStream
+      val q = statefulView(in.toDS()).writeStream
         .outputMode("update").format("memory").queryName("tws_out").start()
       try {
         in.addData(Seq(
           KeyedEvent(1, 1, "c", 1.0), KeyedEvent(2, 2, "c", 2.0)))
-        awaitRow((1, 1L, 1.0, false), "initial key-1 state")
+        awaitRows("tws_out", (1, 1L, 1.0, false), "initial key-1 state")
         in.addData(Seq(
           KeyedEvent(3, 1, "u", 1.5), KeyedEvent(4, 2, "d", 0.0)))
-        awaitRow((1, 3L, 1.5, false), "key-1 update")
-        awaitRow((2, 4L, 0.0, true), "key-2 tombstone")
+        awaitRows("tws_out", (1, 3L, 1.5, false), "key-1 update")
+        awaitRows("tws_out", (2, 4L, 0.0, true), "key-2 tombstone")
         in.addData(Seq(KeyedEvent(1, 1, "c", 1.0))) // stale replay
         // the replay batch re-emits the UNCHANGED seq-3 state (update-mode
         // memory sink appends per batch, so a second identical row proves
         // the replay was processed and rejected)
-        val deadline = System.currentTimeMillis() + 60000
-        while (rows().count(_ == ((1, 3L, 1.5, false))) < 2) {
-          assert(System.currentTimeMillis() < deadline,
-            s"replay batch never processed; table=${rows().toSeq}")
-          Thread.sleep(100)
-        }
+        awaitRows("tws_out", (1, 3L, 1.5, false), "replay batch", n = 2)
       } finally q.stop()
     }
     // final state per key: replay must NOT have regressed key 1
-    val last = rows().groupBy(_._1).map { case (k, rs) => k -> rs.maxBy(_._2) }
+    val last = rows("tws_out").groupBy(_._1).map { case (k, rs) => k -> rs.maxBy(_._2) }
     assert(last(1) == ((1, 3L, 1.5, false)), s"key 1 state wrong: ${last(1)}")
     assert(last(2) == ((2, 4L, 0.0, true)), s"key 2 not tombstoned: ${last(2)}")
   }
 
-  test("ttl view evicts tombstones after the horizon; live keys persist") {
+  test("ttl view evicts tombstones after the horizon; stale events revive") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    // A ProcessingTimeTimeout query never quiesces (the engine keeps
-    // scheduling micro-batches to fire pending timeouts), so
-    // processAllAvailable cannot be used after the TTL is armed — the
-    // test polls the output table against a deadline instead.
-    def rows() = spark.table("svttl_out")
-      .selectExpr("_1 as key", "_2.seq as seq", "_2.deleted as deleted")
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getBoolean(2)))
-    def awaitRow(want: (Int, Long, Boolean), what: String): Unit = {
-      val deadline = System.currentTimeMillis() + 30000
-      while (!rows().contains(want)) {
-        assert(System.currentTimeMillis() < deadline,
-          s"$what never appeared; table=${rows().toSeq}")
-        Thread.sleep(100)
-      }
+    withRocksDb {
+      val in = MemoryStream[KeyedEvent]
+      val q = statefulView(in.toDS(), ttl = java.time.Duration.ofMillis(200)).writeStream
+        .outputMode("update").format("memory").queryName("ttl_out").start()
+      try {
+        in.addData(Seq(
+          KeyedEvent(1, 1, "c", 1.0), KeyedEvent(2, 2, "c", 2.0),
+          KeyedEvent(3, 2, "d", 0.0))) // key 2 tombstoned
+        awaitRows("ttl_out", (2, 3L, 0.0, true), "tombstone emission")
+        Thread.sleep(400) // pass the horizon
+        // WITHIN the horizon the tombstone blocks this stale event (the
+        // test above); AFTER it the state is gone and the event re-creates
+        // the key — the accepted contract once redelivery is impossible,
+        // and the proof that the state was really removed.
+        in.addData(Seq(KeyedEvent(2, 2, "c", 2.0)))
+        awaitRows("ttl_out", (2, 2L, 2.0, false), "post-eviction re-creation")
+      } finally q.stop()
     }
-    val in = MemoryStream[KeyedEvent]
-    val q = StreamApply.statefulViewWithTtl(in.toDS(), ttlMs = 200L).writeStream
-      .outputMode("update").format("memory").queryName("svttl_out").start()
-    try {
-      in.addData(Seq(
-        KeyedEvent(1, 1, "c", 1.0), KeyedEvent(2, 2, "c", 2.0),
-        KeyedEvent(3, 2, "d", 0.0))) // key 2 tombstoned, TTL armed
-      awaitRow((2, 3L, true), "tombstone emission")
-      Thread.sleep(400) // pass the horizon; a timeout batch fires on its own
-      // WITHIN the horizon a stale replay is blocked (statefulView
-      // semantics); AFTER eviction the same stale event re-creates the
-      // key — the accepted contract once redelivery is impossible, and
-      // the proof that the state was really removed.
-      in.addData(Seq(KeyedEvent(2, 2, "c", 2.0)))
-      awaitRow((2, 2L, false), "post-eviction re-creation")
-    } finally q.stop()
-    // live key 1 never timed out: its only emission is the original
-    assert(rows().filter(_._1 == 1).map(_._2).max == 1L)
   }
 }

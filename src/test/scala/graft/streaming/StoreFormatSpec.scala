@@ -142,9 +142,7 @@ class StoreFormatSpec extends SparkSpec with PlannerCells {
     assert(done.map(_._1).toSet == Set(flatDir, ivmDir), s"nothing compacted: $done")
     withClue("compactStores: ") { checkFlat(flatDir); checkIvm(ivmDir) }
     flat.merge(df(batch2), 2)
-    flat.compact()
-    assert(live(flatDir).contains("compact"))
-    withClue("compact: ") { checkFlat(flatDir) }
+    withClue("merge after compactStores: ") { checkFlat(flatDir) }
   }
 
   /** One stored row with its timestamp as epoch micros. */
@@ -222,11 +220,6 @@ class StoreFormatSpec extends SparkSpec with PlannerCells {
     assert(rowsOf(flatStore(merged).snapshot()) == fold(batch0 ++ batch1))
     checkFlat(merged)
 
-    val compacted = legacyFlat("flat-compact")
-    flatStore(compacted).compact()
-    assert(rowsOf(flatStore(compacted).snapshot()) == fold(batch0))
-    checkFlat(compacted)
-
     val fleet = legacyFlat("flat-fleet")
     assert(StreamApply.compactStores(spark, fleet).map(_._1) == Seq(fleet))
     assert(rowsOf(flatStore(fleet).snapshot()) == fold(batch0))
@@ -258,8 +251,6 @@ class StoreFormatSpec extends SparkSpec with PlannerCells {
       withConfs(noCoalesce)(flat.merge(df(batch1), 1))
       assert(StreamApply.compactStores(spark, s"$dir/flat").nonEmpty)
       unchanged("compactStores")
-      flat.compact()
-      unchanged("compact")
       ivm.merge(df(batch0), 0)
       ivm.merge(df(batch1), 1)
       unchanged("IVM merge")

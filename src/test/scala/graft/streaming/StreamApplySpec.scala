@@ -162,7 +162,7 @@ class StreamApplySpec extends SparkSpec {
       .write.parquet(s"$dir/state_vcompact_e99")
     assert(store.snapshot().collect().map(_.toString).sorted.toSeq == before)
 
-    store.compact(numFiles = 1)
+    StreamApply.compactStores(spark, dir)
     val liveAfter = current
     assert(liveAfter.contains("compact"), s"compact version not live: $liveAfter")
     assert(partFiles(liveAfter) == 1, "state not rewritten to one file")
