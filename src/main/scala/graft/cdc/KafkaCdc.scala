@@ -7,12 +7,14 @@ import org.apache.spark.sql.functions._
   * reference deployment (`cdc-pg.public.customer` topic, JSON key/value,
   * `consumer_to_opensearch.py:52-63`) runs to switch onto this engine.
   *
-  * Construction-only in this repo: the test environment has no broker,
-  * so these builders are exercised for plan construction while the full
-  * apply path is covered end-to-end by the `MemoryStream` suites
-  * (`WireStreamSpec` drives the identical unwrap → upsert chain on the
-  * same wire shapes). The streaming options mirror the reference's
-  * consumer contract:
+  * [[wireFrame]] is plain Spark: `UnwrapSpec` feeds it Kafka-source
+  * rows (binary key and value, partition offset) and checks that
+  * [[Unwrap]] reads them as it reads the wire frame. [[readStream]] and
+  * [[writeStream]] need the `spark-sql-kafka` connector on the classpath
+  * and a broker, and this build ships neither, so no test runs them;
+  * the unwrap → upsert chain they feed runs end to end in
+  * `WireStreamSpec` on a `MemoryStream` of the same wire shapes. The
+  * streaming options mirror the reference's consumer contract:
   *
   *   - `startingOffsets=earliest` ↔ `auto_offset_reset="earliest"`
   *     (`consumer_to_opensearch.py:62`)

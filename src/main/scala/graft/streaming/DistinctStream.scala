@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Continuously-maintained DISTINCT-COUNT sketch per group — the
   * streaming twin of the batch r7 registers: 64 Flajolet-Martin-style
@@ -29,47 +27,30 @@ object DistinctStream {
 
   /** One pre-hashed stream element: group + the portable token hash of
     * the counted id (hashing stays a Catalyst expression upstream, so
-    * the processor is pure register arithmetic).
+    * the fold is pure register arithmetic).
     */
   case class Hashed(group: String, h: Long)
 
   /** Per-group register vector, emitted per touched group per batch. */
   case class Registers(group: String, registers: Seq[Long])
 
-  class RegisterProcessor
-      extends StatefulProcessor[String, Hashed, Registers] {
-    @transient private var state: ValueState[Registers] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[Registers]("regs",
-        Encoders.product[Registers], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[Hashed],
-        tv: TimerValues): Iterator[Registers] = {
-      val regs: Array[Long] =
-        if (state.exists()) state.get().registers.toArray
-        else new Array[Long](64)
-      rows.foreach { r =>
-        // floorMod + logical shift: identical to %/÷ for the canonical
-        // non-negative tokenHash feed, and SAFE (no negative array
-        // index, no sign-poisoned lowest-set-bit) should a caller feed
-        // a signed hash like raw xxhash64
-        val bucket = java.lang.Math.floorMod(r.h, 64L).toInt
-        val rest = r.h >>> 6
-        val w = rest & -rest // lowest set bit = FM register weight
-        if (w > regs(bucket)) regs(bucket) = w
-      }
-      val out = Registers(key, regs.toSeq)
-      state.update(out)
-      Iterator.single(out)
-    }
-  }
-
   /** The continuously-maintained sketch view over a pre-hashed feed. */
   def registersView(events: Dataset[Hashed]): Dataset[Registers] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.group)
-      .transformWithState(new RegisterProcessor,
-        TimeMode.None(), OutputMode.Update())
+    StreamApply.keyedState(events.groupByKey(_.group), "regs") {
+      (key: String, prev: Option[Registers], rows: Iterator[Hashed]) =>
+        val regs = prev.fold(new Array[Long](64))(_.registers.toArray)
+        rows.foreach { r =>
+          // floorMod + logical shift: identical to %/÷ for the canonical
+          // non-negative tokenHash feed, and SAFE (no negative array
+          // index, no sign-poisoned lowest-set-bit) should a caller feed
+          // a signed hash like raw xxhash64
+          val bucket = java.lang.Math.floorMod(r.h, 64L).toInt
+          val rest = r.h >>> 6
+          val w = rest & -rest // lowest set bit = FM register weight
+          if (w > regs(bucket)) regs(bucket) = w
+        }
+        Registers(key, regs.toSeq)
+    }((_, s) => s)
   }
 }

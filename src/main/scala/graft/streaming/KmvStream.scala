@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Continuously-maintained KMV (bottom-k) distinct sketch per group — the
   * streaming twin of the batch r18 ([[graft.ext.Sampling.kmvDistinct]]):
@@ -20,7 +18,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
   *
   * Scale shape: state is ≤ k longs per group regardless of stream
   * length, shuffle-partitioned by group on `transformWithState`
-  * (RocksDB provider). Per batch the processor touches only groups with
+  * (RocksDB provider). Per batch the fold touches only groups with
   * arrivals, and each merge is O(batch·log k) into a sorted array.
   */
 object KmvStream {
@@ -38,37 +36,23 @@ object KmvStream {
     */
   case class Sketch(group: String, bottom: Seq[Long])
 
-  class KmvProcessor extends StatefulProcessor[String, Hashed, Sketch] {
-    @transient private var state: ValueState[Sketch] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[Sketch]("kmv",
-        Encoders.product[Sketch], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[Hashed],
-        tv: TimerValues): Iterator[Sketch] = {
-      val set = scala.collection.mutable.TreeSet.empty[Long]
-      if (state.exists()) set ++= state.get().bottom
-      // insert, then prune from above: once the set holds K values,
-      // anything ≥ its max can be skipped outright
-      rows.foreach { r =>
-        if (set.size < K) set += r.h
-        else if (r.h < set.max && !set.contains(r.h)) {
-          set += r.h
-          set -= set.max
-        }
-      }
-      val out = Sketch(key, set.toSeq)
-      state.update(out)
-      Iterator.single(out)
-    }
-  }
-
   /** The continuously-maintained bottom-k view over a pre-hashed feed. */
   def sketchView(events: Dataset[Hashed]): Dataset[Sketch] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.group)
-      .transformWithState(new KmvProcessor,
-        TimeMode.None(), OutputMode.Update())
+    StreamApply.keyedState(events.groupByKey(_.group), "kmv") {
+      (key: String, prev: Option[Sketch], rows: Iterator[Hashed]) =>
+        val set = scala.collection.mutable.TreeSet.empty[Long]
+        prev.foreach(set ++= _.bottom)
+        // insert, then prune from above: once the set holds K values,
+        // anything ≥ its max can be skipped outright
+        rows.foreach { r =>
+          if (set.size < K) set += r.h
+          else if (r.h < set.max && !set.contains(r.h)) {
+            set += r.h
+            set -= set.max
+          }
+        }
+        Sketch(key, set.toSeq)
+    }((_, s) => s)
   }
 }

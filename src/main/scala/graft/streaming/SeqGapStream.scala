@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Continuously-maintained SEQUENCE-GAP monitor — the streaming twin of
   * the batch o25 audit: per fixed-width offset block, an EXACT presence
@@ -46,46 +44,29 @@ object SeqGapStream {
   // public bytecode, which is what the codegen'd caller needs.
   private[streaming] case class BitmapState(lo: Long, hi: Long, words: Seq[Long])
 
-  class GapProcessor
-      extends StatefulProcessor[Long, Offset, BlockHealth] {
-    @transient private var state: ValueState[BitmapState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[BitmapState]("bitmap",
-        Encoders.product[BitmapState], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[Offset],
-        tv: TimerValues): Iterator[BlockHealth] = {
-      // ONE state read per key per batch — each get() deserializes the
-      // full bitmap from the store, so don't read it three times
-      val prev = if (state.exists()) Some(state.get()) else None
-      val words: Array[Long] = prev.map(_.words.toArray)
-        .getOrElse(new Array[Long]((BlockWidth + 63) / 64))
-      var first = prev.map(_.lo).getOrElse(Long.MaxValue)
-      var last = prev.map(_.hi).getOrElse(Long.MinValue)
-      rows.foreach { r =>
-        val off = r.seq - key * BlockWidth
-        // a mismatched (blk, seq) — negative seq, caller bug — must fail
-        // diagnosably, not as a task-level ArrayIndexOutOfBounds
-        require(off >= 0 && off < BlockWidth,
-          s"offset ${r.seq} outside block $key (width $BlockWidth)")
-        val i = off.toInt
-        words(i / 64) |= 1L << (i % 64) // idempotent set-bit
-        if (r.seq < first) first = r.seq
-        if (r.seq > last) last = r.seq
-      }
-      state.update(BitmapState(first, last, words.toSeq))
-      val present = words.map(java.lang.Long.bitCount(_).toLong).sum
-      Iterator.single(BlockHealth(key, first, last, present,
-        last - first + 1 - present))
-    }
-  }
-
   /** The continuously-maintained audit view over an offset stream. */
   def gapView(events: Dataset[Offset]): Dataset[BlockHealth] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.blk)
-      .transformWithState(new GapProcessor,
-        TimeMode.None(), OutputMode.Update())
+    StreamApply.keyedState(events.groupByKey(_.blk), "bitmap") {
+      (key: Long, prev: Option[BitmapState], rows: Iterator[Offset]) =>
+        val words = prev.fold(new Array[Long]((BlockWidth + 63) / 64))(_.words.toArray)
+        var first = prev.fold(Long.MaxValue)(_.lo)
+        var last = prev.fold(Long.MinValue)(_.hi)
+        rows.foreach { r =>
+          val off = r.seq - key * BlockWidth
+          // a mismatched (blk, seq) — negative seq, caller bug — must fail
+          // diagnosably, not as a task-level ArrayIndexOutOfBounds
+          require(off >= 0 && off < BlockWidth,
+            s"offset ${r.seq} outside block $key (width $BlockWidth)")
+          val i = off.toInt
+          words(i / 64) |= 1L << (i % 64) // idempotent set-bit
+          if (r.seq < first) first = r.seq
+          if (r.seq > last) last = r.seq
+        }
+        BitmapState(first, last, words.toSeq)
+    } { (key, s) =>
+      val present = s.words.map(java.lang.Long.bitCount(_).toLong).sum
+      BlockHealth(key, s.lo, s.hi, present, s.hi - s.lo + 1 - present)
+    }
   }
 }

@@ -1,11 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
+  KeyValueGroupedDataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StatefulProcessor,
+  TimeMode, TimerValues, TTLConfig, ValueState}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.reflect.runtime.universe.TypeTag
 import scala.util.control.NonFatal
 
 /** Structured-Streaming side of the CDC engine (SURVEY.md §2 O10/O13 and
@@ -853,33 +856,52 @@ object StreamApply {
     else if (e.op == "d") KeyState(e.seq, 0.0, deleted = true)
     else KeyState(e.seq, e.value, deleted = false)
 
-  /** [[statefulView]]'s processor on the Spark 4 `transformWithState`
-    * API: the key's state lives in a named `ValueState` whose TTL is
-    * enforced BY THE STATE STORE itself (`TTLConfig`) rather than by
-    * hand-managed timers — every update refreshes the key's TTL, so hot
-    * keys persist and idle keys age out without any timer bookkeeping in
-    * the fold. Requires the RocksDB state-store provider (the engine
-    * rejects the HDFS-backed one for this operator), which is also the
-    * provider a 100 TB deployment runs: state spills to disk per
-    * partition instead of living on the executor heap, and changelog
-    * checkpointing ships deltas, not snapshots.
+  /** Keyed state folded per micro-batch, on the Spark 4
+    * `transformWithState` API: one `ValueState[S]` per key, named
+    * `stateName`. Each micro-batch folds a touched key's rows into its
+    * state (`None` for a key no event has reached, or whose state
+    * expired), stores the result and emits `emit(key, state)`, one row
+    * per touched key in update mode.
+    *
+    * `ttl` is enforced BY THE STATE STORE (`TTLConfig`), not by
+    * hand-managed timers: every update refreshes the key's TTL, so hot
+    * keys persist and idle keys age out. The store accepts a TTL only in
+    * processing-time mode, which never quiesces; without one the query
+    * runs in `TimeMode.None`, so `processAllAvailable` returns. The
+    * operator requires the RocksDB state-store provider
+    * ([[withRocksDbState]]), which is also the provider a 100 TB
+    * deployment runs: state spills to disk per partition instead of
+    * living on the executor heap, and changelog checkpointing ships
+    * deltas, not snapshots.
     */
-  class KeyedViewProcessor(ttl: java.time.Duration)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Int, KeyedEvent, (Int, KeyState)] {
-    @transient private var state: org.apache.spark.sql.streaming.ValueState[KeyState] = _
+  def keyedState[K, E, S <: Product : TypeTag, O : Encoder](
+      grouped: KeyValueGroupedDataset[K, E], stateName: String,
+      ttl: Option[java.time.Duration] = None)(
+      fold: (K, Option[S], Iterator[E]) => S)(emit: (K, S) => O): Dataset[O] =
+    grouped.transformWithState(
+      new FoldProcessor(stateName, Encoders.product[S],
+        ttl.fold(TTLConfig.NONE)(TTLConfig(_)), fold, emit),
+      if (ttl.isEmpty) TimeMode.None() else TimeMode.ProcessingTime(),
+      OutputMode.Update())
 
-    override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      state = getHandle.getValueState[KeyState]("view",
-        org.apache.spark.sql.Encoders.product[KeyState],
-        org.apache.spark.sql.streaming.TTLConfig(ttl))
+  /** [[keyedState]]'s processor: the one `StatefulProcessor` of the
+    * engine.
+    */
+  private final class FoldProcessor[K, E, S, O](stateName: String,
+      stateEncoder: Encoder[S], ttl: TTLConfig,
+      fold: (K, Option[S], Iterator[E]) => S, emit: (K, S) => O)
+      extends StatefulProcessor[K, E, O] {
+    @transient private var state: ValueState[S] = _
 
-    override def handleInputRows(key: Int, rows: Iterator[KeyedEvent],
-        tv: org.apache.spark.sql.streaming.TimerValues): Iterator[(Int, KeyState)] = {
-      val next = rows.foldLeft(if (state.exists()) state.get() else KeyState.Empty)(step)
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      state = getHandle.getValueState[S](stateName, stateEncoder, ttl)
+
+    override def handleInputRows(key: K, rows: Iterator[E],
+        tv: TimerValues): Iterator[O] = {
+      // one get() per key per batch: each deserializes the whole state
+      val next = fold(key, Option.when(state.exists())(state.get()), rows)
       state.update(next)
-      Iterator.single(key -> next)
+      Iterator.single(emit(key, next))
     }
   }
 
@@ -904,9 +926,9 @@ object StreamApply {
   def statefulView(events: Dataset[KeyedEvent],
       ttl: java.time.Duration = java.time.Duration.ofMinutes(10)): Dataset[(Int, KeyState)] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.key)
-      .transformWithState(new KeyedViewProcessor(ttl),
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-        org.apache.spark.sql.streaming.OutputMode.Update())
+    keyedState(events.groupByKey(_.key), "view", Some(ttl)) {
+      (_: Int, prev: Option[KeyState], rows: Iterator[KeyedEvent]) =>
+        rows.foldLeft(prev.getOrElse(KeyState.Empty))(step)
+    }(_ -> _)
   }
 }

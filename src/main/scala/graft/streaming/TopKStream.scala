@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Continuously-maintained per-group TOP-K — the streaming twin of the
   * dashboard's q3 ("top-k recent by score"): instead of re-running the
@@ -35,38 +33,21 @@ object TopKStream {
   /** Persisted per-group state: the current top-k, rank order. */
   case class TopKState(items: Seq[TopEntry])
 
-  class TopKProcessor(k: Int)
-      extends StatefulProcessor[Int, Scored, (Int, Seq[TopEntry])] {
-    @transient private var state: ValueState[TopKState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[TopKState]("topk",
-        Encoders.product[TopKState], TTLConfig.NONE)
-
-    override def handleInputRows(key: Int, rows: Iterator[Scored],
-        tv: TimerValues): Iterator[(Int, Seq[TopEntry])] = {
-      val byId = scala.collection.mutable.HashMap.empty[Long, Double]
-      if (state.exists()) state.get().items.foreach(e => byId(e.id) = e.score)
-      rows.foreach { r =>
-        val cur = byId.getOrElse(r.id, Double.NegativeInfinity)
-        if (r.score > cur) byId(r.id) = r.score
-      }
-      val top = byId.iterator.map { case (id, s) => TopEntry(id, s) }.toSeq
-        .sortBy(e => (-e.score, e.id)).take(k)
-      state.update(TopKState(top))
-      Iterator.single(key -> top)
-    }
-  }
-
   /** The continuously-maintained view: one state-store row of ≤ k
     * entries per group, updated and emitted per micro-batch.
     */
   def topkView(events: Dataset[Scored], k: Int = 5): Dataset[(Int, Seq[TopEntry])] = {
     import events.sparkSession.implicits._
-    // TimeMode.None: no timers, no TTL — and unlike ProcessingTime mode
-    // the query quiesces, so processAllAvailable-driven tests work
-    events.groupByKey(_.group)
-      .transformWithState(new TopKProcessor(k),
-        TimeMode.None(), OutputMode.Update())
+    StreamApply.keyedState(events.groupByKey(_.group), "topk") {
+      (_: Int, prev: Option[TopKState], rows: Iterator[Scored]) =>
+        val byId = scala.collection.mutable.HashMap.empty[Long, Double]
+        prev.foreach(_.items.foreach(e => byId(e.id) = e.score))
+        rows.foreach { r =>
+          val cur = byId.getOrElse(r.id, Double.NegativeInfinity)
+          if (r.score > cur) byId(r.id) = r.score
+        }
+        TopKState(byId.iterator.map { case (id, s) => TopEntry(id, s) }.toSeq
+          .sortBy(e => (-e.score, e.id)).take(k))
+    }((key, s) => key -> s.items)
   }
 }

@@ -36,6 +36,13 @@ class UnwrapSpec extends SparkSpec {
     val got = Unwrap.unwrap(raw).orderBy("seq").collect()
     assert(got.map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq ==
       Seq((1L, 4, "u"), (2L, 5, "u"), (3L, 6, "d"), (4L, 7, "d")))
+    // the same records as the Kafka source delivers them: binary key and
+    // value, the partition offset as the sequence number
+    val kafka = raw.select($"key".cast("binary").as("key"),
+      $"value".cast("binary").as("value"), lit("cdc-pg.public.customer").as("topic"),
+      lit(0).as("partition"), $"seq".as("offset"))
+    val viaKafka = Unwrap.unwrap(KafkaCdc.wireFrame(kafka)).orderBy("seq").collect()
+    assert(viaKafka.toSeq == got.toSeq)
     // Upserts carry the row payload; deletes (both forms) carry none.
     val rows = got.map(r => Option(r.getAs[Row]("row")))
     assert(rows(0).get.getAs[String]("full_name") == "Ada")

@@ -1,7 +1,9 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The keyed view on `transformWithState`: state-store-backed CDC
   * materialization must equal the batch fold, stale replays must not
@@ -32,6 +34,24 @@ class StatefulViewSpec extends SparkSpec {
     }
   }
 
+  /** Start `view` into memory sink `name`. A ProcessingTime-mode query
+    * runs batches back to back under the default trigger, so a stop
+    * would land inside one; the interval leaves idle time between them.
+    */
+  private def start(view: Dataset[_], name: String): StreamingQuery =
+    view.writeStream.trigger(Trigger.ProcessingTime("500 milliseconds"))
+      .outputMode("update").format("memory").queryName(name).start()
+
+  /** Stop `q` between triggers: a stop during one cancels its RocksDB
+    * state commit, which logs CANNOT_WRITE_STATE_STORE.CANNOT_COMMIT.
+    */
+  private def stopIdle(q: StreamingQuery): Unit = {
+    val deadline = System.currentTimeMillis() + 30000
+    while (q.status.isTriggerActive && System.currentTimeMillis() < deadline)
+      Thread.sleep(10)
+    q.stop()
+  }
+
   test("stateful view converges to last-write-wins with tombstones kept") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
@@ -39,8 +59,7 @@ class StatefulViewSpec extends SparkSpec {
     // large deployment runs — disk-backed state, changelog checkpoints)
     withRocksDb {
       val in = MemoryStream[KeyedEvent]
-      val q = statefulView(in.toDS()).writeStream
-        .outputMode("update").format("memory").queryName("tws_out").start()
+      val q = start(statefulView(in.toDS()), "tws_out")
       try {
         in.addData(Seq(
           KeyedEvent(1, 1, "c", 1.0), KeyedEvent(2, 2, "c", 2.0)))
@@ -54,7 +73,7 @@ class StatefulViewSpec extends SparkSpec {
         // memory sink appends per batch, so a second identical row proves
         // the replay was processed and rejected)
         awaitRows("tws_out", (1, 3L, 1.5, false), "replay batch", n = 2)
-      } finally q.stop()
+      } finally stopIdle(q)
     }
     // final state per key: replay must NOT have regressed key 1
     val last = rows("tws_out").groupBy(_._1).map { case (k, rs) => k -> rs.maxBy(_._2) }
@@ -85,8 +104,7 @@ class StatefulViewSpec extends SparkSpec {
     }
     withRocksDb {
       val in = MemoryStream[KeyedEvent]
-      val q = statefulView(in.toDS()).writeStream
-        .outputMode("update").format("memory").queryName("fold_out").start()
+      val q = start(statefulView(in.toDS()), "fold_out")
       try {
         in.addData(batches(0))
         awaitRows("fold_out", (2, 6L, 6.0, false), "first batch")
@@ -96,7 +114,7 @@ class StatefulViewSpec extends SparkSpec {
         awaitRows("fold_out", (3, 9L, 9.0, false), "key-3 re-creation")
         // the replay re-emits key 1's unchanged tombstone
         awaitRows("fold_out", (1, 7L, 0.0, true), "replay batch", n = 2)
-      } finally q.stop()
+      } finally stopIdle(q)
     }
     // the memory sink keeps batches in arrival order, so the last row per
     // key is its final state: a stale event that regressed it shows here
@@ -109,8 +127,8 @@ class StatefulViewSpec extends SparkSpec {
     implicit val ctx = spark.sqlContext
     withRocksDb {
       val in = MemoryStream[KeyedEvent]
-      val q = statefulView(in.toDS(), ttl = java.time.Duration.ofMillis(200)).writeStream
-        .outputMode("update").format("memory").queryName("ttl_out").start()
+      val q = start(statefulView(in.toDS(), ttl = java.time.Duration.ofMillis(200)),
+        "ttl_out")
       try {
         in.addData(Seq(
           KeyedEvent(1, 1, "c", 1.0), KeyedEvent(2, 2, "c", 2.0),
@@ -123,7 +141,7 @@ class StatefulViewSpec extends SparkSpec {
         // and the proof that the state was really removed.
         in.addData(Seq(KeyedEvent(2, 2, "c", 2.0)))
         awaitRows("ttl_out", (2, 2L, 2.0, false), "post-eviction re-creation")
-      } finally q.stop()
+      } finally stopIdle(q)
     }
   }
 }

@@ -69,7 +69,8 @@ class StreamApplySpec extends SparkSpec {
     val keys = store.view().select("key").collect().map(_.getInt(0)).toSet
     assert(keys == Set(1, 2), s"torn version leaked into the view: $keys")
     assert(java.nio.file.Files.exists(torn), "reader deleted a version dir")
-    // the replayed merge collects the torn dir on entry and commits fresh
+    // the replayed merge names its version state_v1_e1 again: its write
+    // overwrites the torn dir, then it swings the pointer to it
     store.merge(batch2.toDF(), 1)
     assert(store.view().select("key").collect().map(_.getInt(0)).toSet == Set(1, 3))
   }
@@ -91,7 +92,9 @@ class StreamApplySpec extends SparkSpec {
       "state_v1_e1".getBytes)
     val keys = store.view().select("key").collect().map(_.getInt(0)).toSet
     assert(keys == Set(1, 2), s"uncommitted version leaked into the view: $keys")
-    // the replayed merge collects both strays on entry and commits normally
+    // the replayed merge reuses both names: its write overwrites the
+    // version dir, its pointer write truncates the tmp and renames it over
+    // CURRENT; clean() after the swing collects any other stray
     store.merge(batch2.toDF(), 1)
     assert(store.view().select("key").collect().map(_.getInt(0)).toSet == Set(1, 3))
     assert(!java.nio.file.Files.exists(
